@@ -27,7 +27,7 @@ from pulsarfeatureextractor_spark.functions.text import (
     with_quality_metrics,
     with_token_counts,
 )
-from pulsarfeatureextractor_spark.operators.asof import asof_join
+from pulsarfeatureextractor_spark.operators.asof import asof_join, asof_self_join
 from pulsarfeatureextractor_spark.functions.scores import (
     with_profile_stats_sql,
     with_thornton_scores,
@@ -81,16 +81,13 @@ def _flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats = with_lyon_features(seqs)
 
     # feature snapshots: the same features observed n_tok seconds
-    # earlier (deterministic synthetic observation history)
-    snaps = feats.select(
-        "doc_id",
-        (F.col("event_time") - F.make_interval(secs=F.col("n_tok").cast("double"))).alias("obs_time"),
-        F.col("mean").alias("f_mean_obs"),
-        F.col("stdev").alias("f_std_obs"),
-    )
-    joined = asof_join(
-        feats, snaps, on="event_time", right_on="obs_time", by="doc_id",
-        value_cols=["f_mean_obs", "f_std_obs"], strategy="window",
+    # earlier (deterministic synthetic observation history), joined in
+    # one pass over ``feats`` — the job's plan (jobs/extract_features.py);
+    # token arrays are dropped first so they never enter the shuffle
+    joined = asof_self_join(
+        feats.drop("tokens"), on="event_time", by="doc_id",
+        obs_on=F.col("event_time") - F.make_interval(secs=F.col("n_tok").cast("double")),
+        values={"f_mean_obs": F.col("mean"), "f_std_obs": F.col("stdev")},
     )
     return joined.select(
         "doc_id", "source", "event_time", "n_tok",

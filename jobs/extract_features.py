@@ -33,7 +33,7 @@ def build_pipeline(spark, args):
     from pyspark.sql import functions as F
 
     from pulsarfeatureextractor_spark.functions.featureset import extract_features
-    from pulsarfeatureextractor_spark.operators.asof import asof_join
+    from pulsarfeatureextractor_spark.operators.asof import asof_self_join
     from pulsarfeatureextractor_spark.operators.sessionize import sessionize
     from pulsarfeatureextractor_spark.operators.windows import lagged
     from pulsarfeatureextractor_spark.sinks.manifest import IcebergLikeTable
@@ -62,17 +62,15 @@ def build_pipeline(spark, args):
             feats = extract_features(feats, feature_set)
 
     # prior observations of the same features (obs_time strictly before
-    # event_time by construction) as-of joined back — W1 lag features
-    snaps = feats.select(
-        "doc_id",
-        (F.col("event_time") - F.make_interval(secs=F.col("n_tok").cast("double"))
-         ).alias("obs_time"),
-        F.col("mean").alias("f_mean_obs"),
-        F.col("stdev").alias("f_std_obs"),
-    )
-    joined = asof_join(
-        feats, snaps, on="event_time", right_on="obs_time", by="doc_id",
-        value_cols=["f_mean_obs", "f_std_obs"], strategy="window",
+    # event_time by construction) as-of joined back — W1 lag features.
+    # The one-pass self join reads ``feats`` once: the scan and the
+    # Arrow crossing run once, not once per as-of side.  Token arrays are
+    # dropped first so they never enter the as-of shuffle.
+    joined = asof_self_join(
+        feats.drop("tokens"), on="event_time", by="doc_id",
+        obs_on=F.col("event_time")
+        - F.make_interval(secs=F.col("n_tok").cast("double")),
+        values={"f_mean_obs": F.col("mean"), "f_std_obs": F.col("stdev")},
     )
     enriched = lagged(joined, "doc_id", "event_time", ["mean"], offsets=(1,))
     enriched = sessionize(enriched, "doc_id", "event_time", args.gap_seconds)
@@ -82,7 +80,7 @@ def build_pipeline(spark, args):
         "input_manifest": [f["path"] for f in manifest["files"]],
         "asof": args.asof,
     }
-    return enriched.drop("tokens"), lineage
+    return enriched, lineage
 
 
 def main(argv=None) -> dict:

@@ -1,4 +1,4 @@
-from pulsarfeatureextractor_spark.operators.asof import asof_join
+from pulsarfeatureextractor_spark.operators.asof import asof_join, asof_self_join
 from pulsarfeatureextractor_spark.operators.sessionize import sessionize, session_aggregates
 from pulsarfeatureextractor_spark.operators.windows import (
     ffill,
@@ -11,6 +11,7 @@ from pulsarfeatureextractor_spark.operators.salt import salted_join
 
 __all__ = [
     "asof_join",
+    "asof_self_join",
     "sessionize",
     "session_aggregates",
     "ffill",

@@ -23,6 +23,15 @@ single-shuffle):
   left+right by entity hash; skew on hot entities handled upstream via
   salting (operators/salt.py) or AQE.
 
+  ``asof_self_join`` is the same window plan for the common case where
+  the right side is DERIVED from the left (a table joined onto its own
+  earlier observations): instead of a union whose two sides each
+  re-evaluate the input — two scans, two Python crossings — every input
+  row emits its left and right tagged rows at once through
+  ``inline(array(...))``.  One evaluation of the input, then
+  Generate → Exchange → Sort → Window.  The feature job and the
+  flagship driver query use it.
+
 - ``strategy="merge_asof"`` — co-partition both sides by entity hash,
   per-group ``pd.merge_asof`` inside ``applyInPandas`` (Arrow-batched).
   Exists to cross-validate the window plan and to support "nearest"
@@ -47,7 +56,7 @@ from contextlib import contextmanager
 from typing import Iterable
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -267,6 +276,69 @@ def _asof_window(left, right, on, r_on, by_cols, direction, tolerance,
                               value_cols, out_cols=left.columns)
 
 
+def asof_self_join(
+    df: DataFrame,
+    on: str,
+    by: "str | Iterable[str]",
+    obs_on: Column,
+    values: "dict[str, Column]",
+    direction: str = "backward",
+    tolerance: "float | None" = None,
+) -> DataFrame:
+    """As-of join a DataFrame onto its own derived observations in ONE
+    evaluation of ``df``.
+
+    Result equals ``asof_join(df, snaps, on=on, right_on="__obs",
+    by=by, value_cols=list(values), strategy="window")`` where ``snaps =
+    df.select(*by, obs_on.alias("__obs"), *[c.alias(n) for n, c in
+    values.items()])`` — but that form reads ``df`` twice, once per
+    union side, so an upstream scan and Python map run twice.  Here
+    each input row emits both tagged rows at once through
+    ``inline(array(left_struct, right_struct))``: the left row keeps
+    every column of ``df`` with NULL value slots, the right row carries
+    only ``(by, obs_on, values)``.  Right rows with a NULL key or NULL
+    ``obs_on`` are dropped (they can never match), then the tagged rows
+    feed the same window pass as ``strategy="window"``.
+
+    Every column of ``df`` rides through the as-of shuffle (the struct
+    hides unused ones from column pruning), so drop what the caller
+    does not need downstream — token arrays above all — before calling.
+    """
+    by_cols = _normalize_cols(by)
+    if direction not in ("backward", "forward"):
+        raise ValueError(f"asof_self_join: unknown direction {direction}")
+    clash = [n for n in values if n in df.columns or n in (_SIDE, _RTS)]
+    if clash:
+        raise ValueError(f"asof_self_join: value names {clash} already in df")
+    value_cols = list(values)
+    axis = df.schema[on].dataType
+    value_types = df.select(*[c.alias(n) for n, c in values.items()]).schema
+    obs = obs_on.cast(axis)
+
+    left_row = F.struct(
+        *[F.col(c) for c in df.columns],
+        F.lit(1).alias(_SIDE),
+        F.lit(None).cast(axis).alias(_RTS),
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in value_types],
+    )
+    right_row = F.struct(
+        *[F.col(c) if c in by_cols
+          else obs.alias(c) if c == on
+          else F.lit(None).cast(df.schema[c].dataType).alias(c)
+          for c in df.columns],
+        F.lit(0).alias(_SIDE),
+        obs.alias(_RTS),
+        *[values[n].alias(n) for n in value_cols],
+    )
+    right_ok = F.col(_RTS).isNotNull()
+    for c in by_cols:
+        right_ok = right_ok & F.col(c).isNotNull()
+    tagged = (df.select(F.inline(F.array(left_row, right_row)))
+              .where((F.col(_SIDE) == 1) | right_ok))
+    return _asof_window_apply(tagged, on, by_cols, direction, tolerance,
+                              value_cols, out_cols=df.columns)
+
+
 def _asof_broadcast(left, right, on, r_on, by_cols, direction, tolerance,
                     value_cols) -> DataFrame:
     """Broadcast as-of plan: ZERO shuffle of the big (left) side.
@@ -380,12 +452,14 @@ def prepare_bucketed_asof_table(
         value_cols = [c for c in right.columns if c not in (*by_cols, r_on)]
     unioned = _asof_tag_union(left, right, on, r_on, by_cols, list(value_cols))
     spark = left.sparkSession
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
     # Stale-file refusal (ADVICE r2/r3) — shared guard, Hadoop-FS-routed
-    # so hdfs:// and s3a:// targets are covered (fsutil.py).
+    # so hdfs:// and s3a:// targets are covered (fsutil.py).  Validate
+    # BEFORE dropping, so a refused write leaves the live table
+    # registered.
     from ..fsutil import ensure_empty_dir
 
     ensure_empty_dir(spark, path, overwrite, "prepare_bucketed_asof_table")
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
     # one file per bucket: repartition on the SAME key/count as bucketBy
     # (identical murmur3 hash → task i holds exactly bucket i) — the
     # single write-time shuffle this layout ever pays

@@ -202,15 +202,17 @@ def prepare_digest_reference(
     else:
         raise ValueError("reference needs a 'digest' column or text_col=")
     spark = reference.sparkSession
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
     # Stale-file refusal (same hazard + same shared guard as
     # prepare_bucketed_asof_table): DROP TABLE leaves an EXTERNAL
     # table's part files behind, and a rebuilt reference registered at
     # the same path would silently absorb the prior corpus's digests —
-    # new documents matching the stale set would be dropped.
+    # new documents matching the stale set would be dropped.  Validate
+    # BEFORE dropping, so a refused write leaves the live index
+    # registered.
     from ..fsutil import ensure_empty_dir
 
     ensure_empty_dir(spark, path, overwrite, "prepare_digest_reference")
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
     (
         ref.dropDuplicates()
         .repartition(n_buckets, F.col("digest"))
@@ -605,10 +607,11 @@ def prepare_minhash_reference(
         "signature",
     )
     spark = reference.sparkSession
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
     from ..fsutil import ensure_empty_dir
 
+    # validate first: a refused write must leave the live index registered
     ensure_empty_dir(spark, path, overwrite, "prepare_minhash_reference")
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
     (
         banded.repartition(n_buckets, F.col("band_hash"))
         .write.bucketBy(n_buckets, "band_hash")

@@ -10,9 +10,13 @@ Design:
   completed partition keys (fsync'd, atomically replaced after every
   batch commit — a crash can lose at most the in-flight batch, never
   corrupt the file);
-- the partition diff is relational, not driver-side set math at scale:
-  ``resume_plan`` = planned partitions LEFT ANTI JOIN completed
-  partitions (SURVEY.md §2B J4);
+- the default single-batch write (``batch_size=0``) plans nothing up
+  front: it filters out the completed keys and reads the keys it wrote
+  back from the write's own ``df.observe`` accumulator, so the input
+  lineage runs exactly once;
+- batched writes need their key list first: ``resume_plan`` = planned
+  partitions LEFT ANTI JOIN completed partitions, a relational diff
+  rather than driver-side set math at scale (SURVEY.md §2B J4);
 - each batch of partitions is one atomic Spark parquet job writing
   under ``out_dir`` with dynamic partition overwrite, so a partition
   dir is either fully committed by the parquet protocol or invisible;
@@ -126,32 +130,40 @@ def run_partitioned_job(
       batch and the rerun re-emits exactly the missing partitions.
     - ``fail_after_batches`` (tests only): simulate a mid-run kill.
 
-    Scale note: the distinct-partition-keys collect is one tiny
-    aggregate (#partitions rows, not #rows); the data path stays fully
-    distributed and each batch job is a plain partitioned parquet write
-    with AQE sizing.
+    Scale note: ``batch_size=0`` evaluates ``df`` once — one SQL
+    execution, no planning job.  The completed keys are filtered out
+    with ``isin`` and the written keys come back through the write's
+    ``Observation`` as a ``collect_set`` (#partitions values, not
+    #rows).  ``batch_size=k`` first collects the distinct partition
+    keys (one extra evaluation of ``df``'s lineage, reduced to
+    #partitions rows), then runs one plain partitioned parquet write
+    per batch with AQE sizing.
     """
     checkpoint_path = checkpoint_path or os.path.join(out_dir, "_checkpoint.json")
     part_cols = list(partition_cols)
     lineage = lineage or {}
-
-    planned = df.select(*part_cols).distinct()
-    todo_df = resume_plan(planned, checkpoint_path, part_cols)
-    # collect the SAME Spark-computed __key the batch filter uses — a
-    # driver-side str() of raw values would disagree on NULLs ('None')
-    # and booleans ('True'), silently dropping those partitions while
-    # marking them done (data loss on every rerun).
-    todo = sorted(
-        r["__key"]
-        for r in todo_df.select(
-            _partition_key_expr(part_cols).alias("__key")
-        ).collect()
-    )
     ckpt = load_checkpoint(checkpoint_path)
     skipped = sorted(ckpt["done"].keys())
+    key_expr = _partition_key_expr(part_cols)
 
-    if not todo:
-        return {"written": [], "skipped": skipped}
+    batches: "list[list[str] | None]"
+    if batch_size <= 0:
+        # one write, no planning job: the batch is "every key not yet
+        # done"
+        batches = [None]
+    else:
+        # collect the SAME Spark-computed __key the batch filter uses —
+        # a driver-side str() of raw values would disagree on NULLs
+        # ('None') and booleans ('True'), silently dropping those
+        # partitions while marking them done (data loss on every rerun).
+        todo_df = resume_plan(df.select(*part_cols).distinct(),
+                              checkpoint_path, part_cols)
+        todo = sorted(
+            r["__key"] for r in todo_df.select(key_expr.alias("__key")).collect()
+        )
+        if not todo:
+            return {"written": [], "skipped": skipped}
+        batches = [todo[i:i + batch_size] for i in range(0, len(todo), batch_size)]
 
     spark = df.sparkSession
     # dynamic overwrite: only the partitions present in the batch are
@@ -161,30 +173,30 @@ def run_partitioned_job(
     prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
-    batches: list[list[str]]
-    if batch_size <= 0:
-        batches = [todo]
-    else:
-        batches = [todo[i:i + batch_size] for i in range(0, len(todo), batch_size)]
-
-    key_expr = _partition_key_expr(part_cols)
     written: list[str] = []
     try:
         for bi, batch in enumerate(batches):
             if fail_after_batches and bi >= fail_after_batches:
                 raise RuntimeError(f"simulated kill before batch {bi}")
             obs = Observation(f"batch-{bi}")
-            batch_df = df.withColumn("__key", key_expr).where(
-                F.col("__key").isin(batch)
-            )
+            batch_df = df.withColumn("__key", key_expr)
+            if batch is not None:
+                batch_df = batch_df.where(F.col("__key").isin(batch))
+            elif skipped:
+                batch_df = batch_df.where(~F.col("__key").isin(skipped))
+            # the written keys come from the write itself, not the plan
             observed = batch_df.observe(
-                obs, F.count(F.lit(1)).alias("rows")
+                obs, F.count(F.lit(1)).alias("rows"),
+                F.collect_set("__key").alias("__keys"),
             ).drop("__key")
             (observed.write.mode("overwrite")
              .partitionBy(*part_cols).parquet(out_dir))
             metrics = dict(obs.get)
-            metrics["partitions"] = len(batch)
-            for key in batch:
+            keys = sorted(metrics.pop("__keys"))
+            if not keys:  # every partition was already done
+                continue
+            metrics["partitions"] = len(keys)
+            for key in keys:
                 sidecar = {
                     "partition": key,
                     "partition_spec": part_cols,
@@ -199,7 +211,7 @@ def run_partitioned_job(
                         json.dump(sidecar, f, default=str)
                 ckpt["done"][key] = sidecar
             _save_checkpoint(checkpoint_path, ckpt)
-            written.extend(batch)
+            written.extend(keys)
     finally:
         if prev_mode is None:
             spark.conf.unset("spark.sql.sources.partitionOverwriteMode")

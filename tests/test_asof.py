@@ -3,11 +3,14 @@ tolerance, forward direction, and the zero-temporal-leakage property."""
 
 from __future__ import annotations
 
+import datetime as dt
+
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
-from pulsarfeatureextractor_spark.operators.asof import asof_join
+from pulsarfeatureextractor_spark.operators.asof import asof_join, asof_self_join
 
 EPOCH = pd.Timestamp("2024-01-01")
 
@@ -180,3 +183,110 @@ def test_broadcast_plan_shape(spark, tmp_path):
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert "SortMergeJoin" not in plan, plan
     assert plan.count("Sort [") == 0, plan
+
+
+# ---- one-pass self as-of: asof_self_join == asof_join(df, derived snaps)
+
+_SELF_SCHEMA = ("rid long, doc_id string, event_time timestamp, n_tok int, "
+                "mean double, stdev double")
+_T0 = dt.datetime(2024, 1, 1)
+
+
+def _self_rows(seed: int, n: int = 300, n_docs: int = 15) -> list[tuple]:
+    """Random feature rows with NULL doc_id / event_time / n_tok (the
+    obs_on input), duplicate (doc_id, event_time) rows and fully
+    duplicated rows.  (doc_id, obs_time) stays unique among the rows
+    that yield a right side: two different observations at one instant
+    have no pinned winner in any as-of plan."""
+    rng = np.random.default_rng(seed)
+    rows, seen = [], set()
+    for rid in range(n):
+        doc = None if rng.random() < 0.05 else f"d{rng.integers(0, n_docs)}"
+        ts = None if rng.random() < 0.05 else _T0 + dt.timedelta(
+            seconds=int(rng.integers(0, 5_000)))
+        if rows and rng.random() < 0.1:  # duplicate (doc_id, event_time)
+            doc, ts = rows[int(rng.integers(0, len(rows)))][1:3]
+        n_tok = None if rng.random() < 0.05 else int(rng.integers(0, 300))
+        obs = None if ts is None or n_tok is None else ts - dt.timedelta(seconds=n_tok)
+        if doc is not None and obs is not None:
+            if (doc, obs) in seen:
+                continue
+            seen.add((doc, obs))
+        rows.append((rid, doc, ts, n_tok, float(rng.normal()), float(rng.random())))
+    rows += [(n + i, *rows[i][1:]) for i in range(0, len(rows), 25)]  # exact dups
+    return rows
+
+
+def _self_vs_two_pass(df, direction="backward", tolerance=None):
+    obs = F.col("event_time") - F.make_interval(secs=F.col("n_tok").cast("double"))
+    values = {"f_mean_obs": F.col("mean"), "f_std_obs": F.col("stdev")}
+    got = asof_self_join(df, on="event_time", by="doc_id", obs_on=obs,
+                         values=values, direction=direction, tolerance=tolerance)
+    snaps = df.select("doc_id", obs.alias("obs_time"),
+                      *[c.alias(n) for n, c in values.items()])
+    want = asof_join(df, snaps, on="event_time", right_on="obs_time",
+                     by="doc_id", value_cols=list(values), direction=direction,
+                     tolerance=tolerance, strategy="window")
+    assert got.schema.simpleString() == want.schema.simpleString()
+
+    def canon(d):
+        return sorted((tuple(r) for r in d.collect()),
+                      key=lambda r: tuple((v is None, v) for v in r))
+
+    return canon(got), canon(want)
+
+
+@pytest.mark.parametrize("tolerance", [None, 120.0])
+@pytest.mark.parametrize("direction", ["backward", "forward"])
+@pytest.mark.parametrize("seed", [1, 2])
+def test_self_join_equals_two_pass(spark, seed, direction, tolerance):
+    df = spark.createDataFrame(_self_rows(seed), _SELF_SCHEMA)
+    got, want = _self_vs_two_pass(df, direction, tolerance)
+    assert len(got) == df.count()
+    assert got == want
+    # the fixture must exercise both matches and NULL fills
+    matched = sum(r[-2] is not None for r in got)
+    assert len(got) // 10 < matched < len(got)
+
+
+@pytest.mark.parametrize("direction", ["backward", "forward"])
+def test_self_join_nulls_and_duplicates_by_hand(spark, direction):
+    """Pinned values: NULL doc_id / event_time rows match nothing; a
+    NULL n_tok row yields no observation but still gets one; duplicate
+    (doc_id, event_time) rows get the same fill."""
+    t = lambda s: _T0 + dt.timedelta(seconds=s)  # noqa: E731
+    rows = [
+        (0, "a", t(100), 10, 1.0, 0.1),    # obs at 90
+        (1, "a", t(100), 50, 2.0, 0.2),    # duplicate ts, obs at 50
+        (2, "a", t(95), None, 3.0, 0.3),   # NULL obs_on: no right row
+        (3, None, t(100), 5, 4.0, 0.4),    # NULL key: matches nothing
+        (4, "a", None, 5, 5.0, 0.5),       # NULL ts: matches nothing
+        (5, "b", t(10), 0, 6.0, 0.6),      # obs == event_time: exact tie
+        (6, "c", t(50), None, 7.0, 0.7),   # "c" has no valid observation:
+        (7, "c", None, 5, 8.0, 0.8),       # NULL-time ones must not leak
+    ]
+    got, want = _self_vs_two_pass(spark.createDataFrame(rows, _SELF_SCHEMA),
+                                  direction)
+    assert got == want
+    fill = {r[0]: r[-2] for r in got}
+    if direction == "backward":
+        assert fill == {0: 1.0, 1: 1.0, 2: 1.0, 3: None, 4: None, 5: 6.0,
+                        6: None, 7: None}
+    else:
+        assert fill == {0: None, 1: None, 2: None, 3: None, 4: None, 5: 6.0,
+                        6: None, 7: None}
+
+
+def test_self_join_empty_input(spark):
+    got, want = _self_vs_two_pass(spark.createDataFrame([], _SELF_SCHEMA))
+    assert got == want == []
+
+
+def test_self_join_rejects_bad_arguments(spark):
+    df = spark.createDataFrame([], _SELF_SCHEMA)
+    obs = F.col("event_time")
+    with pytest.raises(ValueError, match="already in df"):
+        asof_self_join(df, "event_time", "doc_id", obs, {"mean": F.col("mean")})
+    with pytest.raises(ValueError, match="direction"):
+        asof_self_join(df, "event_time", "doc_id", obs, {"m": F.col("mean")},
+                       direction="nearest")

@@ -208,3 +208,22 @@ def test_fuzzy_banding_mismatch_refused(spark, mh_ref_table):
     _, crawl = _fuzzy_corpora(spark)
     with pytest.raises(ValueError, match="banding mismatch"):
         minhash_dedup_against(crawl, mh_ref_table, num_perm=32, bands=8)
+
+
+@pytest.mark.parametrize("prepare", [prepare_digest_reference,
+                                     prepare_minhash_reference])
+def test_refused_overwrite_keeps_index_registered(spark, tmp_path, prepare):
+    """A refused rebuild over a non-empty path (overwrite=False) must
+    leave the live index registered: the path check runs BEFORE the
+    DROP TABLE, so the failed call changes nothing."""
+    ingested, _ = _fuzzy_corpora(spark)
+    name = f"refused_{prepare.__name__}"
+    path = str(tmp_path / "tbl")
+    kw = {"text_col": "text"} if prepare is prepare_digest_reference else {}
+    prepare(ingested, name, path, n_buckets=4, **kw)
+    before = spark.table(name).count()
+    with pytest.raises(ValueError, match="non-empty"):
+        prepare(ingested, name, path, n_buckets=4, **kw)
+    assert spark.catalog.tableExists(name)
+    assert spark.table(name).count() == before
+    spark.sql(f"DROP TABLE IF EXISTS {name}")

@@ -120,3 +120,86 @@ def test_lineage_sidecars_written(spark, seq_df, tmp_path):
     assert side["partition_spec"] == ["source"]
     assert side["batch_metrics"]["rows"] == 400
     assert side["batch_metrics"]["partitions"] == 20
+
+
+def _last_sql_execution(spark) -> int:
+    """Id of the latest SQL execution (ids are sequential; -1: none yet),
+    read from the session's status store once its listener bus drained."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = int(store.executionsCount())
+    return store.executionsList(n - 1, 1).apply(0).executionId() if n else -1
+
+
+def test_batched_kill_then_single_batch_resume(spark, seq_df, tmp_path):
+    """A batch_size=4 run killed after two batches, resumed with
+    batch_size=0: the one-pass write skips the done keys, writes exactly
+    the 12 missing ones and lands the same rows as an uninterrupted run."""
+    df = seq_df.withColumn("mean", F.lit(1.0))
+    ref_out = str(tmp_path / "ref")
+    run_partitioned_job(df, ref_out, ["source"], str(tmp_path / "ref.json"))
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt.json")
+    with pytest.raises(RuntimeError, match="simulated kill"):
+        run_partitioned_job(df, out, ["source"], ckpt, batch_size=4,
+                            fail_after_batches=2)
+    done = set(load_checkpoint(ckpt)["done"])
+    assert len(done) == 8
+
+    res = run_partitioned_job(df, out, ["source"], ckpt, batch_size=0)
+    all_keys = {f"src{i}" for i in range(20)}
+    assert res["written"] == sorted(all_keys - done)
+    assert set(res["skipped"]) == done
+    assert set(load_checkpoint(ckpt)["done"]) == all_keys
+    side = json.load(open(os.path.join(out, f"source={res['written'][0]}",
+                                       "_lineage.json")))
+    missing_rows = df.where(~F.col("source").isin(sorted(done))).count()
+    assert side["batch_metrics"] == {"rows": missing_rows, "partitions": 12}
+    cols = ["doc_id", "n_tok", "source", "mean"]
+    assert sorted(map(tuple, spark.read.parquet(out).select(*cols).collect())) == \
+        sorted(map(tuple, spark.read.parquet(ref_out).select(*cols).collect()))
+
+
+def test_single_batch_write_is_one_sql_execution(spark, seq_df, tmp_path):
+    """batch_size=0 plans nothing up front: the write is the only SQL
+    execution, and its observation supplies the written keys."""
+    df = seq_df.withColumn("mean", F.lit(1.0))
+    mark = _last_sql_execution(spark)
+    res = run_partitioned_job(df, str(tmp_path / "out"), ["source"],
+                              str(tmp_path / "ckpt.json"))
+    assert _last_sql_execution(spark) - mark == 1
+    assert len(res["written"]) == 20
+    # a fully done rerun is still one pass, and writes nothing
+    mark = _last_sql_execution(spark)
+    res2 = run_partitioned_job(df, str(tmp_path / "out"), ["source"],
+                               str(tmp_path / "ckpt.json"))
+    assert _last_sql_execution(spark) - mark == 1
+    assert res2 == {"written": [], "skipped": res["written"]}
+
+
+def test_single_batch_null_and_bool_keys(spark, tmp_path):
+    """NULL and boolean partition values round-trip through the
+    observed-key path: the keys read back from the observation are the
+    same Spark-rendered strings the batched path collects."""
+    from pyspark.sql import Row
+
+    rows = [
+        Row(part="a", flag=True, v=1),
+        Row(part="a", flag=False, v=2),
+        Row(part=None, flag=True, v=3),
+        Row(part=None, flag=False, v=4),
+        Row(part="b", flag=None, v=5),
+    ]
+    df = spark.createDataFrame(rows)
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt.json")
+    with pytest.raises(RuntimeError):
+        run_partitioned_job(df, out, ["part", "flag"], ckpt, batch_size=2,
+                            fail_after_batches=1)
+    done = set(load_checkpoint(ckpt)["done"])
+    res = run_partitioned_job(df, out, ["part", "flag"], ckpt)
+    want = {"a/true", "a/false", "__HIVE_DEFAULT_PARTITION__/true",
+            "__HIVE_DEFAULT_PARTITION__/false", "b/__HIVE_DEFAULT_PARTITION__"}
+    assert set(res["written"]) == want - done and len(done) == 2
+    assert set(load_checkpoint(ckpt)["done"]) == want
+    assert os.path.exists(os.path.join(
+        out, "part=__HIVE_DEFAULT_PARTITION__", "flag=false", "_lineage.json"))
+    assert sorted(r["v"] for r in spark.read.parquet(out).collect()) == [1, 2, 3, 4, 5]

@@ -233,3 +233,32 @@ def test_embedding_generation_plan_pure_map(spark):
     assert plan.count("ArrowEvalPython") == 1
     assert "Exchange" not in plan
     assert "BatchEvalPython" not in plan  # no row-at-a-time python
+
+
+def test_feature_job_lineage_evaluated_once(spark, tmp_path):
+    """The shipped job's plan (jobs/extract_features.build_pipeline)
+    scans the snapshot once, crosses into Python once and shuffles once:
+    the self as-of derives its right side from the same pass, and
+    lag/sessionize reuse the as-of's doc_id partitioning."""
+    import argparse
+    import importlib.util
+    import os
+
+    from pulsarfeatureextractor_spark.sinks.manifest import IcebergLikeTable
+    from pulsarfeatureextractor_spark.sources.tokenized import synthetic_sequences
+
+    table = str(tmp_path / "table")
+    IcebergLikeTable(table).write(synthetic_sequences(spark, 200, seed=3),
+                                  partition_by=["source"])
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "extract_features", os.path.join(root, "jobs", "extract_features.py"))
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+    args = argparse.Namespace(input=table, snapshot=None, asof=None,
+                              scores=False, feature_set=None, gap_seconds=1800.0)
+    plan = _plan(job.build_pipeline(spark, args)[0])
+    assert plan.count("MapInArrow") == 1, plan
+    assert plan.count("FileScan") == 1, plan
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert plan.count("Exchange") == 1, plan

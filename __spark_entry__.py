@@ -1772,9 +1772,9 @@ def range_partition_sorted_events(spark, sf):
 
 def lyon_pandas_udf_docs(spark, sf):
     """V1 driver gate: the scalar Arrow ``@pandas_udf`` moment path
-    (struct return) — same pinned expression order as the mapInArrow
-    default, so it hits the same DuckDB oracle bit-for-bit.
-    SURVEY.md §2C V1."""
+    (struct return).  It runs the same kernel as the mapInArrow default
+    (``moments_list_array``, pinned power-sum expression order), so it
+    hits the same DuckDB oracle bit-for-bit.  SURVEY.md §2C V1."""
     from pulsarfeatureextractor_spark.functions.moments import lyon_moments
 
     seqs = documents_to_sequences(load_table(spark, sf, "documents"))
@@ -3404,7 +3404,7 @@ def oracle_sql() -> dict[str, str]:
         "langid_model_docs": _langid_model_sql(),
         "lyon_features_docs": """
             -- exact integer power sums + pinned expression order ==
-            -- bit-identical to the engine's moments_offsets (tokens are
+            -- bit-identical to the engine's moments_segments (tokens are
             -- ints < 256: every sum exact in BIGINT/DOUBLE)
             WITH seq AS (
                 SELECT CAST(doc_id AS VARCHAR) AS doc_id,
@@ -3522,7 +3522,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         "incremental_backfill_docs": """
             -- exact integer power sums + pinned expression order ==
-            -- bit-identical to the engine's moments_offsets (tokens are
+            -- bit-identical to the engine's moments_segments (tokens are
             -- ints < 256: every sum exact in BIGINT/DOUBLE)
             WITH seq AS (
                 SELECT CAST(doc_id AS VARCHAR) AS doc_id,

@@ -122,7 +122,7 @@ def _pipeline_from(seqs, snaps, scores: bool = False):
     the moments alone), used by the scaling probe so the measurement is
     compute-dense like production feature extraction.
     """
-    from pulsarfeatureextractor_spark.functions.featureset import fused_features_arrow
+    from pulsarfeatureextractor_spark.functions.featureset import extract_features
     from pulsarfeatureextractor_spark.operators.asof import asof_join
     from pulsarfeatureextractor_spark.sources.tokenized import with_event_time
 
@@ -131,8 +131,8 @@ def _pipeline_from(seqs, snaps, scores: bool = False):
     # join need, tokens dropped AT the boundary so they never ride the
     # Python->JVM return nor the as-of shuffle (~90% of the bytes).
     seqs = with_event_time(seqs).select("doc_id", "event_time", "tokens")
-    feats = fused_features_arrow(
-        seqs, include_scores=scores, drop=("tokens",)
+    feats = extract_features(
+        seqs, ("lyon", "thornton") if scores else "lyon", drop=("tokens",)
     )
     return asof_join(
         feats, snaps, on="event_time", right_on="obs_time", by="doc_id",

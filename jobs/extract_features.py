@@ -49,25 +49,20 @@ def build_pipeline(spark, args):
         seqs = seqs.where(F.col("event_time") <= F.lit(args.asof).cast("timestamp"))
 
     # Lyon moments are always computed (the as-of snapshots carry them);
-    # every other family layers on top VIA THE LIBRARY SELECTOR so the
-    # job's output schema for a set name is identical to
-    # functions.featureset.extract_features's (mirrors the reference
-    # CLI's numbered feature-type switch).
+    # the chosen set rides the SAME library call, so every Arrow family
+    # shares one Python crossing.  Token arrays are dropped at that
+    # boundary: they never come back from Python nor enter the as-of
+    # shuffle.  Columns: the input's minus tokens, then Lyon, then the
+    # set's own (for "all", its columns as extract_features orders them).
     feature_set = args.feature_set or ("all" if args.scores else "lyon")
-    if feature_set == "all":
-        feats = extract_features(seqs, "all")
-    else:
-        feats = extract_features(seqs, "lyon")
-        if feature_set != "lyon":
-            feats = extract_features(feats, feature_set)
+    feats = extract_features(seqs, ("lyon", feature_set), drop=("tokens",))
 
     # prior observations of the same features (obs_time strictly before
     # event_time by construction) as-of joined back — W1 lag features.
     # The one-pass self join reads ``feats`` once: the scan and the
-    # Arrow crossing run once, not once per as-of side.  Token arrays are
-    # dropped first so they never enter the as-of shuffle.
+    # Arrow crossing run once, not once per as-of side.
     joined = asof_self_join(
-        feats.drop("tokens"), on="event_time", by="doc_id",
+        feats, on="event_time", by="doc_id",
         obs_on=F.col("event_time")
         - F.make_interval(secs=F.col("n_tok").cast("double")),
         values={"f_mean_obs": F.col("mean"), "f_std_obs": F.col("stdev")},

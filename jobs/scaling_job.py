@@ -45,7 +45,7 @@ def main() -> None:
                          "query-time Sort (Scan -> Window -> Filter)")
     args = ap.parse_args()
 
-    from pulsarfeatureextractor_spark.functions.featureset import fused_features_arrow
+    from pulsarfeatureextractor_spark.functions.featureset import extract_features
     from pulsarfeatureextractor_spark.operators.asof import asof_join
     from pulsarfeatureextractor_spark.session import get_spark
     from pulsarfeatureextractor_spark.sources.tokenized import with_event_time
@@ -59,7 +59,7 @@ def main() -> None:
         seqs = with_event_time(
             spark.read.parquet(os.path.join(args.input, "sequences"))
         ).select("doc_id", "event_time", "tokens")
-        feats = fused_features_arrow(seqs, include_scores=True, drop=("tokens",))
+        feats = extract_features(seqs, ("lyon", "thornton"), drop=("tokens",))
         snaps = spark.read.parquet(os.path.join(args.input, "snapshots"))
         return asof_join(
             feats, snaps, on="event_time", right_on="obs_time", by="doc_id",
@@ -83,8 +83,8 @@ def main() -> None:
                 spark, "asof_union", on="event_time", by="doc_id",
                 value_cols=VC,
             )
-            feats = fused_features_arrow(joined, include_scores=True,
-                                         drop=("tokens",))
+            feats = extract_features(joined, ("lyon", "thornton"),
+                                     drop=("tokens",))
             return feats.select("doc_id", "event_time", "mean", "stdev",
                                 "skew", "kurt", "f_mean", "f_std")
 

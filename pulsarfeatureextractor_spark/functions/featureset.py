@@ -1,5 +1,6 @@
 """Type-selectable feature extraction — the engine's analogue of the
-reference CLI's feature-type flag.
+reference CLI's feature-type flag — and the one Arrow builder every
+Python feature family runs through.
 
 The reference family exposes a numbered feature-type switch choosing
 which published feature set to emit per candidate (SURVEY.md §2A A9;
@@ -9,8 +10,8 @@ sets are passthrough/derived conveniences in the same vectorized
 patterns).  Sets:
 
 - ``lyon``      : 4 moment features of the token array (A7; the 8-set
-  = profile + DM curve is two rows/kinds of the same 4).
-- ``thornton``  : 10 curve-fit/peak scores (A8 1-D subset).
+  = profile + DM curve is two rows/kinds of the same 4).  Arrow.
+- ``thornton``  : 10 curve-fit/peak scores (A8 1-D subset).  Arrow.
 - ``stats``     : SQL-expressible quick stats (S/N, peak offset) — the
   JVM-only tier for cheap prefiltering.
 - ``widths``    : Eatough-style pulse-width / peak-shape features
@@ -26,17 +27,27 @@ patterns).  Sets:
   family) over the deterministic synthetic cube derived from the token
   curve (real sub-band data is absent from the hinted input shape; a
   real cube loads into the same flat band-major column and scores via
-  ``scores.with_subband_scores`` directly).
-- ``all``       : lyon + thornton + widths + stats.
+  ``scores.with_subband_scores`` directly).  Arrow.
+- ``all``       : lyon + thornton + widths + stats (the two thornton
+  columns that stats duplicates are suffixed ``_t``).
 
-Each set appends flat, prunable double columns; ``tokens`` is never
-mutated (input_hint invariant).
+Physical plan: ONE ``mapInArrow`` crossing per ``extract_features``
+call, however many Arrow families the requested sets name
+(:func:`map_features`).  The JVM families are projected before it, so
+``drop`` can remove the token arrays at the Python boundary and the
+return crossing ships only the narrow feature columns.  Output columns
+are the input's (minus ``drop``) followed by each family's columns in
+set order; ``tokens`` is never mutated (input_hint invariant).
 """
 
 from __future__ import annotations
 
+from typing import Callable, NamedTuple, Sequence
+
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 FEATURE_SETS = (
     "lyon", "thornton", "stats", "widths", "peace", "spinn", "subband",
@@ -44,126 +55,153 @@ FEATURE_SETS = (
 )
 
 
-def extract_features(
-    df: DataFrame, feature_set: str = "lyon", tokens_col: str = "tokens"
-) -> DataFrame:
-    """Append the chosen feature set's columns (see module docstring)."""
-    from pulsarfeatureextractor_spark.functions.moments import with_lyon_features
-    from pulsarfeatureextractor_spark.functions.scores import (
-        with_profile_stats_sql,
-        with_thornton_scores,
-    )
+class Kernel(NamedTuple):
+    """An Arrow feature family: ``fn`` maps the pyarrow list array in
+    column ``col`` to an (n, len(fields)) float64 matrix."""
 
-    if feature_set == "lyon":
-        return with_lyon_features(df, tokens_col)
-    if feature_set == "thornton":
-        return with_thornton_scores(df, tokens_col)
-    if feature_set == "stats":
-        return with_profile_stats_sql(df, tokens_col)
-    if feature_set == "widths":
-        from pulsarfeatureextractor_spark.functions.scores import with_width_features
-
-        return with_width_features(df, tokens_col)
-    if feature_set == "peace":
-        from pulsarfeatureextractor_spark.functions.scores import with_peace_features
-
-        return with_peace_features(df, tokens_col)
-    if feature_set == "spinn":
-        from pulsarfeatureextractor_spark.functions.scores import with_spinn_features
-
-        return with_spinn_features(df, tokens_col)
-    if feature_set == "subband":
-        from pulsarfeatureextractor_spark.functions.scores import (
-            with_subband_scores,
-        )
-        from pulsarfeatureextractor_spark.sources.tokenized import (
-            with_synthetic_subbands,
-        )
-
-        return with_subband_scores(
-            with_synthetic_subbands(df, tokens_col), "sb_flat"
-        )
-    if feature_set == "raw":
-        return df.withColumn(
-            "raw_bins",
-            F.transform(F.col(tokens_col), lambda v: v.cast("double")),
-        )
-    if feature_set == "all":
-        from pulsarfeatureextractor_spark.functions.scores import with_width_features
-
-        out = with_lyon_features(df, tokens_col)
-        out = with_thornton_scores(out, tokens_col)
-        out = with_width_features(out, tokens_col)
-        # stats columns duplicate two thornton columns; suffix them
-        out = with_profile_stats_sql(
-            out.withColumnRenamed("sn_ratio", "sn_ratio_t")
-            .withColumnRenamed("peak_offset", "peak_offset_t"),
-            tokens_col,
-        )
-        return out
-    raise ValueError(f"unknown feature set {feature_set!r}; one of {FEATURE_SETS}")
+    col: str
+    fields: Sequence[str]
+    fn: Callable[..., np.ndarray]
 
 
-def fused_features_arrow(
-    df: DataFrame,
-    tokens_col: str = "tokens",
-    include_scores: bool = True,
-    drop: "tuple[str, ...] | list[str]" = (),
-) -> DataFrame:
-    """Lyon moments (+ Thornton scores) in ONE ``mapInArrow`` pass —
-    the production hot path for the full per-candidate workload.
+def list_layout(arr) -> "tuple[np.ndarray, np.ndarray, np.ndarray]":
+    """``(values, starts, counts)`` of a pyarrow List/LargeList array:
+    row i owns ``values[starts[i]:starts[i] + counts[i]]``.
 
-    Why this exists: composing ``with_lyon_features`` then
-    ``with_thornton_scores`` plans TWO consecutive PythonMapInArrow
-    operators, i.e. two full JVM→Python→JVM Arrow round-trips in which
-    the token arrays (~90% of the bytes) ride both crossings.  Arrow
-    transfer is memory-bandwidth-bound, so at high core counts the
-    duplicated crossing is contention, not just latency — fusing the
-    two kernels into one pass halves the Python-boundary traffic and
-    measurably improves N→4N scaling efficiency (BENCH/BASELINE.md).
-
-    ``drop`` additionally removes columns from the OUTPUT batches at
-    the Python boundary (typically ``("tokens",)`` once the features
-    are computed) so the return crossing ships only the narrow feature
-    columns instead of echoing the token buffers back to the JVM.
-
-    Results are identical to the composed operators (pytest-pinned:
-    moments bit-exact, scores allclose at 1e-12 — the lstsq kernel is
-    batch-composition-dependent at ~1e-16).
+    ``values`` is the UNSLICED child buffer and ``starts`` are absolute
+    offsets into it, so a sliced array needs no rebasing.  A legal Arrow
+    list array may give a NULL slot a nonzero extent; its count is
+    zeroed so those child values are never read.
     """
     import pyarrow as pa
 
-    from pyspark.sql import types as T
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    offsets = np.asarray(arr.offsets, dtype=np.int64)
+    counts = np.diff(offsets)
+    if arr.null_count:
+        counts = np.where(np.asarray(arr.is_valid()), counts, 0)
+    return np.asarray(arr.values), offsets[:-1], counts
 
-    from pulsarfeatureextractor_spark.functions.moments import (
-        LYON_FIELDS,
-        moments_list_array,
-    )
-    from pulsarfeatureextractor_spark.functions.scores import (
-        SCORE_FIELDS,
-        scores_list_array,
-    )
 
-    dropset = set(drop)
-    keep = [f for f in df.schema.fields if f.name not in dropset]
-    feat_names = list(LYON_FIELDS) + (list(SCORE_FIELDS) if include_scores else [])
-    out_schema = T.StructType(
-        list(keep) + [T.StructField(n, T.DoubleType(), True) for n in feat_names]
-    )
+def map_features(
+    df: DataFrame, kernels: Sequence[Kernel], drop: Sequence[str] = ()
+) -> DataFrame:
+    """Append every kernel's columns in ONE ``mapInArrow`` pass.
+
+    Each Arrow batch crosses into Python once; every kernel reads its
+    list column as flat buffers (no per-row Python objects) and the
+    feature matrices come back as plain float64 arrays.  Kept columns
+    pass through by reference.  ``drop`` removes columns from the
+    OUTPUT batches at the Python boundary (typically ``("tokens",)``),
+    so the return crossing never echoes the token buffers back.
+    Embarrassingly parallel: no shuffle, the scan partitioning is the
+    job partitioning.
+    """
+    import pyarrow as pa
+
+    keep = [f for f in df.schema.fields if f.name not in drop]
     keep_names = [f.name for f in keep]
+    feat_names = [n for k in kernels for n in k.fields]
+    names = keep_names + feat_names
+    out_schema = T.StructType(
+        keep + [T.StructField(n, T.DoubleType(), True) for n in feat_names]
+    )
 
     def compute(batches):
         for batch in batches:
-            tok = batch.column(tokens_col)
-            mats = [moments_list_array(tok)]
-            if include_scores:
-                mats.append(scores_list_array(tok))
             arrays = [batch.column(n) for n in keep_names]
-            for mat in mats:
+            for k in kernels:
+                mat = k.fn(batch.column(k.col))
                 arrays.extend(
                     pa.array(mat[:, i], type=pa.float64())
                     for i in range(mat.shape[1])
                 )
-            yield pa.RecordBatch.from_arrays(arrays, names=keep_names + feat_names)
+            yield pa.RecordBatch.from_arrays(arrays, names=names)
 
     return df.mapInArrow(compute, out_schema)
+
+
+def _with_raw_bins(df: DataFrame, tokens_col: str) -> DataFrame:
+    return df.withColumn(
+        "raw_bins", F.transform(F.col(tokens_col), lambda v: v.cast("double"))
+    )
+
+
+def _families(feature_set: str, tokens_col: str) -> list:
+    """The set's families in output order: a :class:`Kernel` (Arrow) or
+    a JVM function ``(df, tokens_col) -> df``."""
+    from pulsarfeatureextractor_spark.functions.moments import (
+        LYON_FIELDS,
+        moments_list_array,
+    )
+    from pulsarfeatureextractor_spark.functions import scores as s
+    from pulsarfeatureextractor_spark.sources.tokenized import (
+        with_synthetic_subbands,
+    )
+
+    lyon = Kernel(tokens_col, tuple(LYON_FIELDS), moments_list_array)
+    thornton = Kernel(tokens_col, tuple(s.SCORE_FIELDS), s.scores_list_array)
+    sets = {
+        "lyon": [lyon],
+        "thornton": [thornton],
+        "stats": [s.with_profile_stats_sql],
+        "widths": [s.with_width_features],
+        "peace": [s.with_peace_features],
+        "spinn": [s.with_spinn_features],
+        "raw": [_with_raw_bins],
+        "subband": [
+            with_synthetic_subbands,
+            Kernel("sb_flat", tuple(s.SUBBAND_FIELDS), s.subband_scores_list_array),
+        ],
+        # stats columns duplicate two thornton columns; suffix those
+        "all": [
+            lyon,
+            thornton._replace(fields=tuple(
+                f + "_t" if f in ("sn_ratio", "peak_offset") else f
+                for f in s.SCORE_FIELDS
+            )),
+            s.with_width_features,
+            s.with_profile_stats_sql,
+        ],
+    }
+    if feature_set not in sets:
+        raise ValueError(
+            f"unknown feature set {feature_set!r}; one of {FEATURE_SETS}"
+        )
+    return sets[feature_set]
+
+
+def extract_features(
+    df: DataFrame,
+    feature_set: "str | Sequence[str]" = "lyon",
+    tokens_col: str = "tokens",
+    drop: Sequence[str] = (),
+) -> DataFrame:
+    """Append the chosen feature set's columns (see module docstring).
+
+    ``feature_set`` is a set name or a sequence of them; a family named
+    by several sets is computed once (``("lyon", "all")`` equals
+    ``"all"``).  All Arrow families share one :func:`map_features`
+    crossing, which removes ``drop`` at the Python boundary; the JVM
+    families are projected before it, so they may read dropped columns.
+    """
+    names = [feature_set] if isinstance(feature_set, str) else feature_set
+    families = []
+    for name in names:
+        families += [f for f in _families(name, tokens_col) if f not in families]
+
+    added = {}
+    out = df
+    for fam in families:
+        if not isinstance(fam, Kernel):
+            before = set(out.columns)
+            out = fam(out, tokens_col)
+            added[fam] = [c for c in out.columns if c not in before]
+    kernels = [f for f in families if isinstance(f, Kernel)]
+    out = map_features(out, kernels, drop) if kernels else out.drop(*drop)
+    return out.select(
+        *[c for c in df.columns if c not in drop],
+        *[c for f in families
+          for c in (f.fields if isinstance(f, Kernel) else added[f])],
+    )

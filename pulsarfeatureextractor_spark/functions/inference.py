@@ -342,7 +342,8 @@ def keep_top_fraction_by(
     semantics: score TIES at the boundary are ALL kept (rank, not
     row_number — deterministic under any partitioning with no
     tiebreaker column needed), NULL scores are never kept, an all-NULL
-    or empty group keeps nothing.
+    or empty group keeps nothing.  An input that already has one of the
+    three columns is refused (``ValueError``) rather than overwritten.
 
     Plan shape / 100 TB posture: ONE exchange on the group key; both
     window frames reuse that partitioning.  The caller filters on
@@ -360,6 +361,9 @@ def keep_top_fraction_by(
     """
     if not 0.0 < fraction <= 1.0:
         raise ValueError("fraction must be in (0, 1]")
+    taken = [c for c in ("grp_n", "grp_rank", "keep_frac") if c in df.columns]
+    if taken:
+        raise ValueError(f"keep_top_fraction_by would overwrite {taken}")
     by_cols = [by] if isinstance(by, str) else list(by)
     w_part = Window.partitionBy(*by_cols)
     w_rank = w_part.orderBy(F.col(score_col).desc_nulls_last())

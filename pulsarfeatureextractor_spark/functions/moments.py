@@ -16,12 +16,16 @@ Conventions pinned here and in tests/oracle.py (SURVEY.md Appendix A):
 
 where m_k = sum((x-mu)**k) / n.
 
-Execution model: one Arrow batch at a time through a pandas UDF —
-NEVER per-row Python (north_star mandate).  Rows are grouped by array
-length inside the batch so each group is a dense (rows, len) float64
-matrix and every moment is a handful of vectorized numpy reductions.
-At 10^12 rows this is embarrassingly parallel: no shuffle, no state,
-pure map — the scan partitioning is the job partitioning.
+Execution model: every Spark path (the ``mapInArrow`` builder behind
+``with_lyon_features`` and the scalar ``lyon_moments`` pandas UDF) runs
+ONE kernel, :func:`moments_list_array`: power sums over the Arrow list
+column's flat value buffer in the pinned expression order of
+:func:`_moments_from_sums` — NEVER per-row Python (north_star mandate),
+and bit-identical to the DuckDB oracles.  :func:`moments_rows` /
+:func:`moments_matrix` are the centered two-pass formulation, kept as
+an independent reference that agrees to ~1e-9 relative.  At 10^12
+rows this is embarrassingly parallel: no shuffle, no state, pure map —
+the scan partitioning is the job partitioning.
 """
 
 from __future__ import annotations
@@ -31,6 +35,12 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from pulsarfeatureextractor_spark.functions.featureset import (
+    Kernel,
+    list_layout,
+    map_features,
+)
 
 LYON_FIELDS = ["mean", "stdev", "skew", "kurt"]
 
@@ -110,52 +120,17 @@ def _moments_from_sums(n, s1, s2, s3, s4):
     return mu, stdev, skew, kurt
 
 
-def moments_offsets(values: np.ndarray, offsets: np.ndarray) -> np.ndarray:
-    """Row-wise (mean, stdev, skew, kurt) from a FLAT value buffer.
-
-    ``values`` is the concatenation of all rows' arrays; ``offsets`` is
-    the (n_rows+1) Arrow-style offset vector (CONTIGUOUS: row i owns
-    values[offsets[i]:offsets[i+1]] with no gaps).  No per-row Python
-    objects are ever created — this is the 10^12-row hot path
-    (profiling showed Arrow→pandas conversion of list columns, i.e. one
-    numpy object per row, costs ~10x the moment arithmetic itself).
-    """
-    counts = np.diff(offsets)
-    n_rows = len(counts)
-    out = np.zeros((n_rows, 4), dtype=np.float64)
-    valid = counts > 0
-    if not valid.any():
-        return out
-    x = np.asarray(values, dtype=np.float64)
-    idx = offsets[:-1][valid]
-    n = counts[valid].astype(np.float64)
-
-    # EXACT integer power sums (tokens are int32 < 2^8, n <= O(10^3):
-    # every partial sum stays < 2^53, so s1..s4 are exact in float64
-    # regardless of summation order)
-    s1 = np.add.reduceat(x, idx)
-    s2 = np.add.reduceat(x * x, idx)
-    x3 = x * x * x
-    s3 = np.add.reduceat(x3, idx)
-    s4 = np.add.reduceat(x3 * x, idx)
-
-    mu, stdev, skew, kurt = _moments_from_sums(n, s1, s2, s3, s4)
-    out[valid, 0] = mu
-    out[valid, 1] = stdev
-    out[valid, 2] = skew
-    out[valid, 3] = kurt
-    return out
-
-
 def moments_segments(
     values: np.ndarray, starts: np.ndarray, counts: np.ndarray
 ) -> np.ndarray:
-    """Row-wise moments over ARBITRARY (start, count) segments of a flat
-    buffer — the general kernel behind :func:`moments_list_array` when
-    the Arrow layout is non-contiguous (null slots that own a nonzero
-    extent, sliced arrays).  Interleaved-boundary ``add.reduceat`` sums
-    exactly [start, start+count) per row, so gap values can never leak
-    into a neighbouring row."""
+    """Row-wise (mean, stdev, skew, kurt) over (start, count) segments
+    of a FLAT value buffer: row i owns values[start:start+count].  No
+    per-row Python objects are ever created — this is the 10^12-row hot
+    path (profiling showed Arrow->pandas conversion of list columns, i.e.
+    one numpy object per row, costs ~10x the moment arithmetic itself).
+    Interleaved-boundary ``add.reduceat`` sums exactly [start,
+    start+count) per row, so gap values can never leak into a
+    neighbouring row; empty rows yield all-zero moments."""
     n_rows = len(counts)
     out = np.zeros((n_rows, 4), dtype=np.float64)
     valid = counts > 0
@@ -167,14 +142,20 @@ def moments_segments(
     bounds[0::2] = s
     bounds[1::2] = e
     # pad one slot so an end index == len(values) is a legal reduceat index
-    x = np.concatenate([np.asarray(values, dtype=np.float64), [0.0]])
+    x = np.zeros(len(values) + 1, dtype=np.float64)
+    x[:-1] = values
     n = (e - s).astype(np.float64)
-    x2 = x * x
-    x3 = x2 * x
+
+    # EXACT integer power sums (tokens are int32 < 2^8, n <= O(10^3):
+    # every partial sum stays < 2^53, so s1..s4 are exact in float64
+    # regardless of summation order)
     s1 = np.add.reduceat(x, bounds)[0::2]
-    s2 = np.add.reduceat(x2, bounds)[0::2]
-    s3 = np.add.reduceat(x3, bounds)[0::2]
-    s4 = np.add.reduceat(x3 * x, bounds)[0::2]
+    p = x * x  # then x^3, x^4 in place: one temporary, not three
+    s2 = np.add.reduceat(p, bounds)[0::2]
+    p *= x
+    s3 = np.add.reduceat(p, bounds)[0::2]
+    p *= x
+    s4 = np.add.reduceat(p, bounds)[0::2]
 
     mu, stdev, skew, kurt = _moments_from_sums(n, s1, s2, s3, s4)
     out[valid, 0] = mu
@@ -186,30 +167,16 @@ def moments_segments(
 
 def moments_list_array(arr) -> np.ndarray:
     """(n, 4) moments for a pyarrow List/LargeList array (no row objects)."""
-    import pyarrow as pa
-
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    offsets = np.asarray(arr.offsets, dtype=np.int64)
-    if arr.null_count == 0:
-        # fast path: flatten() trims the child buffer to this array's
-        # slice and the buffer is contiguous; rebase offsets
-        return moments_offsets(np.asarray(arr.flatten()), offsets - offsets[0])
-    # general path: a legal Arrow list array may give a NULL slot a
-    # nonzero extent — flatten() drops those child values while the
-    # offsets still count them (misaligned reduceat / crash).  Index the
-    # UNSLICED child buffer (arr.values) with absolute offsets and zero
-    # out the null slots' counts so their extents are never summed.
-    starts = offsets[:-1]
-    counts = np.diff(offsets)
-    counts = np.where(np.asarray(arr.is_valid()), counts, 0)
-    return moments_segments(np.asarray(arr.values), starts, counts)
+    return moments_segments(*list_layout(arr))
 
 
 @F.pandas_udf(LYON_STRUCT)
 def lyon_moments_udf(tokens: pd.Series) -> pd.DataFrame:
-    """Arrow-vectorized Series[array] → DataFrame[mean,stdev,skew,kurt]."""
-    res = moments_rows(tokens)
+    """Arrow-vectorized Series[array] → DataFrame[mean,stdev,skew,kurt],
+    through the same kernel as ``with_lyon_features`` (bit-identical)."""
+    import pyarrow as pa
+
+    res = moments_list_array(pa.array(tokens, type=pa.list_(pa.float64())))
     return pd.DataFrame(res, columns=LYON_FIELDS)
 
 
@@ -315,36 +282,10 @@ def lyon8_features(
     return feats.groupBy(id_col).agg(*aggs)
 
 
-def with_lyon_features(
-    df: DataFrame, tokens_col: str = "tokens", prefix: str = ""
-) -> DataFrame:
-    """Append the four Lyon moment columns computed from ``tokens_col``.
-
-    Physical plan: ``mapInArrow`` — each Arrow batch's list column is
-    consumed as (flat value buffer, offsets) and the four moments come
-    back as plain float64 arrays appended to the batch.  All other
-    columns pass through by reference (zero copy).  The token array
-    itself is never mutated (per-row invariant: exact token-array
-    equality, BASELINE.json input_hint).  Embarrassingly parallel —
-    no shuffle; the scan partitioning is the job partitioning.
-    """
-    import pyarrow as pa
-
-    out_fields = list(df.schema.fields) + [
-        T.StructField(prefix + name, T.DoubleType(), True) for name in LYON_FIELDS
-    ]
-    out_schema = T.StructType(out_fields)
-    tok_col = tokens_col
-    names = [prefix + name for name in LYON_FIELDS]
-
-    def compute(batches):
-        for batch in batches:
-            moments = moments_list_array(batch.column(tok_col))
-            arrays = batch.columns + [
-                pa.array(moments[:, i], type=pa.float64()) for i in range(4)
-            ]
-            yield pa.RecordBatch.from_arrays(
-                arrays, names=batch.schema.names + names
-            )
-
-    return df.mapInArrow(compute, out_schema)
+def with_lyon_features(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
+    """Append the four Lyon moment columns computed from ``tokens_col``
+    (one ``featureset.map_features`` crossing; the token array is never
+    mutated — BASELINE.json input_hint)."""
+    return map_features(
+        df, [Kernel(tokens_col, tuple(LYON_FIELDS), moments_list_array)]
+    )

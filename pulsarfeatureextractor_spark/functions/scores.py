@@ -27,10 +27,17 @@ partitioning is the job partitioning, identical to the Lyon moments.
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from pulsarfeatureextractor_spark.functions.featureset import (
+    Kernel,
+    list_layout,
+    map_features,
+)
 
 SCORE_FIELDS = [
     "sin_chi2",      # chi2/n of best-fit sine (fundamental) to the normalized profile
@@ -151,66 +158,34 @@ def scores_matrix(mat: np.ndarray) -> np.ndarray:
     return out
 
 
-def scores_list_array(arr) -> np.ndarray:
-    """(n, len(SCORE_FIELDS)) scores for a pyarrow list array.
-
-    Groups rows by length (dense matrices), scatters back into input
-    order; empty/null rows yield all-zero scores.
-    """
-    import pyarrow as pa
-
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    offsets = np.asarray(arr.offsets, dtype=np.int64)
-    if arr.null_count == 0:
-        # fast path: contiguous buffer, rebase offsets onto flatten()
-        values = np.asarray(arr.flatten(), dtype=np.float64)
-        starts_all = offsets[:-1] - offsets[0]
-        counts = np.diff(offsets)
-    else:
-        # a NULL slot may legally own a nonzero extent: flatten() drops
-        # those child values while offsets still count them.  Use the
-        # UNSLICED child buffer with absolute offsets and zero the null
-        # slots' counts so their extents are never gathered.
-        values = np.asarray(arr.values, dtype=np.float64)
-        starts_all = offsets[:-1]
-        counts = np.where(np.asarray(arr.is_valid()), np.diff(offsets), 0)
-    n_rows = len(counts)
-    out = np.zeros((n_rows, len(SCORE_FIELDS)), dtype=np.float64)
+def _by_length(arr, kernel, width: int, min_len: int, step: int = 1):
+    """(n, width) rows of ``kernel`` over a pyarrow list array, one call
+    per distinct row length on the dense (rows, length) float64 matrix,
+    scattered back into input order.  Lengths below ``min_len`` or not
+    a multiple of ``step`` (empty and NULL rows included) yield zeros."""
+    values, starts, counts = list_layout(arr)
+    values = np.asarray(values, dtype=np.float64)
+    out = np.zeros((len(counts), width), dtype=np.float64)
     for length in np.unique(counts):
-        if length < 4:
+        if length < min_len or length % step:
             continue
         idxs = np.nonzero(counts == length)[0]
-        starts = starts_all[idxs]
-        gather = starts[:, None] + np.arange(length)[None, :]
-        out[idxs, :] = scores_matrix(values[gather])
+        out[idxs, :] = kernel(values[starts[idxs, None] + np.arange(length)])
     return out
 
 
-def with_thornton_scores(
-    df: DataFrame, tokens_col: str = "tokens", prefix: str = ""
-) -> DataFrame:
-    """Append the Thornton-style score columns (mapInArrow, zero-object)."""
-    import pyarrow as pa
+def scores_list_array(arr) -> np.ndarray:
+    """(n, len(SCORE_FIELDS)) scores for a pyarrow list array; rows
+    shorter than 4 (empty and NULL rows included) score all zeros."""
+    return _by_length(arr, scores_matrix, len(SCORE_FIELDS), 4)
 
-    out_fields = list(df.schema.fields) + [
-        T.StructField(prefix + name, T.DoubleType(), True) for name in SCORE_FIELDS
-    ]
-    out_schema = T.StructType(out_fields)
-    names = [prefix + name for name in SCORE_FIELDS]
 
-    def compute(batches):
-        for batch in batches:
-            scores = scores_list_array(batch.column(tokens_col))
-            arrays = batch.columns + [
-                pa.array(scores[:, i], type=pa.float64())
-                for i in range(len(SCORE_FIELDS))
-            ]
-            yield pa.RecordBatch.from_arrays(
-                arrays, names=batch.schema.names + names
-            )
-
-    return df.mapInArrow(compute, out_schema)
+def with_thornton_scores(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
+    """Append the Thornton-style score columns (one
+    ``featureset.map_features`` crossing, zero-object)."""
+    return map_features(
+        df, [Kernel(tokens_col, tuple(SCORE_FIELDS), scores_list_array)]
+    )
 
 
 SUBBAND_FIELDS = [
@@ -285,7 +260,7 @@ def subband_scores_cube(cube: np.ndarray) -> np.ndarray:
     return out
 
 
-def subband_scores_list_array(arr, n_chan: int) -> np.ndarray:
+def subband_scores_list_array(arr, n_chan: int = 8) -> np.ndarray:
     """(n, len(SUBBAND_FIELDS)) scores for a pyarrow list array of FLAT
     band-major cubes (band 0's bins, then band 1's, ...).
 
@@ -294,37 +269,18 @@ def subband_scores_list_array(arr, n_chan: int) -> np.ndarray:
     Rows whose length is not a positive multiple of ``n_chan`` (or with
     n_bins < 4) yield all-zero scores.
     """
-    import pyarrow as pa
-
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    offsets = np.asarray(arr.offsets, dtype=np.int64)
-    if arr.null_count == 0:
-        values = np.asarray(arr.flatten(), dtype=np.float64)
-        starts_all = offsets[:-1] - offsets[0]
-        counts = np.diff(offsets)
-    else:
-        values = np.asarray(arr.values, dtype=np.float64)
-        starts_all = offsets[:-1]
-        counts = np.where(np.asarray(arr.is_valid()), np.diff(offsets), 0)
-    n_rows = len(counts)
-    out = np.zeros((n_rows, len(SUBBAND_FIELDS)), dtype=np.float64)
-    for length in np.unique(counts):
-        if length <= 0 or length % n_chan != 0 or length // n_chan < 4:
-            continue
-        idxs = np.nonzero(counts == length)[0]
-        starts = starts_all[idxs]
-        gather = starts[:, None] + np.arange(length)[None, :]
-        cube = values[gather].reshape(len(idxs), n_chan, length // n_chan)
-        out[idxs, :] = subband_scores_cube(cube)
-    return out
+    return _by_length(
+        arr, lambda m: subband_scores_cube(m.reshape(len(m), n_chan, -1)),
+        len(SUBBAND_FIELDS), 4 * n_chan, n_chan,
+    )
 
 
 def with_subband_scores(
     df: DataFrame, flat_col: str = "sb_flat", n_chan: int = 8,
     drop: "tuple[str, ...] | list[str]" = (),
 ) -> DataFrame:
-    """Append the sub-band score columns (mapInArrow, zero-object).
+    """Append the sub-band score columns (one
+    ``featureset.map_features`` crossing, zero-object).
 
     ``flat_col`` holds each candidate's (n_chan x n_bins) cube flattened
     band-major into one array — the Arrow-friendly encoding of the
@@ -337,33 +293,10 @@ def with_subband_scores(
     should select the columns they need before calling; ``drop``
     additionally removes columns (typically the wide cube itself) from
     the OUTPUT batches at the Python boundary, so the return crossing
-    ships only the narrow score columns — same discipline as
-    ``featureset.fused_features_arrow``.
+    ships only the narrow score columns.
     """
-    import pyarrow as pa
-
-    dropset = set(drop)
-    keep = [f for f in df.schema.fields if f.name not in dropset]
-    keep_names = [f.name for f in keep]
-    out_schema = T.StructType(
-        list(keep) + [
-            T.StructField(name, T.DoubleType(), True)
-            for name in SUBBAND_FIELDS
-        ]
-    )
-
-    def compute(batches):
-        for batch in batches:
-            scores = subband_scores_list_array(batch.column(flat_col), n_chan)
-            arrays = [batch.column(n) for n in keep_names] + [
-                pa.array(scores[:, i], type=pa.float64())
-                for i in range(len(SUBBAND_FIELDS))
-            ]
-            yield pa.RecordBatch.from_arrays(
-                arrays, names=keep_names + SUBBAND_FIELDS
-            )
-
-    return df.mapInArrow(compute, out_schema)
+    fn = partial(subband_scores_list_array, n_chan=n_chan)
+    return map_features(df, [Kernel(flat_col, tuple(SUBBAND_FIELDS), fn)], drop)
 
 
 def with_width_features(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:

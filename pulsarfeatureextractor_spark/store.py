@@ -38,24 +38,14 @@ class FeatureFrame:
 
         return self._wrap(with_event_time(self.df, doc_id, mode))
 
-    def features(self, feature_set: str = "lyon", tokens_col: str = "tokens"):
+    def features(self, feature_set: "str | Sequence[str]" = "lyon",
+                 tokens_col: str = "tokens", drop: Sequence[str] = ()):
+        """Every Arrow family of the set(s) in ONE Python crossing,
+        dropping ``drop`` at its boundary (see
+        functions.featureset.extract_features)."""
         from pulsarfeatureextractor_spark.functions.featureset import extract_features
 
-        return self._wrap(extract_features(self.df, feature_set, tokens_col))
-
-    def fused_features(self, include_scores: bool = True,
-                       drop: Sequence[str] = ("tokens",),
-                       tokens_col: str = "tokens"):
-        """Moments (+ Thornton scores) in ONE Arrow crossing, dropping
-        ``drop`` at the Python boundary — the scale hot path (see
-        functions.featureset.fused_features_arrow)."""
-        from pulsarfeatureextractor_spark.functions.featureset import (
-            fused_features_arrow,
-        )
-
-        return self._wrap(fused_features_arrow(
-            self.df, tokens_col=tokens_col, include_scores=include_scores,
-            drop=tuple(drop)))
+        return self._wrap(extract_features(self.df, feature_set, tokens_col, drop))
 
     def asof_join(self, right, **kwargs):
         from pulsarfeatureextractor_spark.operators.asof import asof_join

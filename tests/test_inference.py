@@ -426,6 +426,19 @@ def test_top_fraction_by_all_null_group_and_bounds(spark):
         keep_top_fraction_by(df, "s", "lang", 1.5)
 
 
+@pytest.mark.parametrize("col", ["grp_n", "grp_rank", "keep_frac"])
+def test_top_fraction_by_refuses_existing_output_column(spark, col):
+    from pulsarfeatureextractor_spark.functions.inference import (
+        keep_top_fraction_by,
+    )
+
+    df = spark.createDataFrame(
+        [(1, "a", 1.0, 7)], f"doc_id long, lang string, s double, {col} long"
+    )
+    with pytest.raises(ValueError, match=col):
+        keep_top_fraction_by(df, "s", "lang", 0.5)
+
+
 def test_top_fraction_by_one_exchange(spark):
     from pulsarfeatureextractor_spark.functions.inference import (
         keep_top_fraction_by,

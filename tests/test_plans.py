@@ -121,9 +121,7 @@ def test_fused_pipeline_one_python_one_exchange(spark):
     """The full scaling workload (fused features + as-of) must plan
     EXACTLY one Python operator and one exchange — the invariant behind
     the N->4N scaling posture (BENCH/BASELINE.md)."""
-    from pulsarfeatureextractor_spark.functions.featureset import (
-        fused_features_arrow,
-    )
+    from pulsarfeatureextractor_spark.functions.featureset import extract_features
     from pulsarfeatureextractor_spark.operators.asof import asof_join
     from pulsarfeatureextractor_spark.sources.tokenized import (
         synthetic_sequences,
@@ -136,7 +134,7 @@ def test_fused_pipeline_one_python_one_exchange(spark):
     )
     snaps = synthetic_snapshots(spark, 100, 150)
     out = asof_join(
-        fused_features_arrow(seqs, include_scores=True, drop=("tokens",)),
+        extract_features(seqs, ("lyon", "thornton"), drop=("tokens",)),
         snaps, on="event_time", right_on="obs_time", by="doc_id",
         value_cols=["f_mean", "f_std"], strategy="window",
     ).select("doc_id", "event_time", "mean", "stdev", "f_mean")
@@ -235,11 +233,15 @@ def test_embedding_generation_plan_pure_map(spark):
     assert "BatchEvalPython" not in plan  # no row-at-a-time python
 
 
-def test_feature_job_lineage_evaluated_once(spark, tmp_path):
+@pytest.mark.parametrize("feature_set", [
+    None, "thornton", "stats", "widths", "peace", "spinn", "raw", "all",
+])
+def test_feature_job_lineage_evaluated_once(spark, tmp_path, feature_set):
     """The shipped job's plan (jobs/extract_features.build_pipeline)
-    scans the snapshot once, crosses into Python once and shuffles once:
-    the self as-of derives its right side from the same pass, and
-    lag/sessionize reuse the as-of's doc_id partitioning."""
+    scans the snapshot once, crosses into Python once and shuffles once,
+    for every --feature-set: Lyon and the set's Arrow families share one
+    crossing, the self as-of derives its right side from the same pass,
+    and lag/sessionize reuse the as-of's doc_id partitioning."""
     import argparse
     import importlib.util
     import os
@@ -256,9 +258,12 @@ def test_feature_job_lineage_evaluated_once(spark, tmp_path):
     job = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(job)
     args = argparse.Namespace(input=table, snapshot=None, asof=None,
-                              scores=False, feature_set=None, gap_seconds=1800.0)
+                              scores=False, feature_set=feature_set,
+                              gap_seconds=1800.0)
     plan = _plan(job.build_pipeline(spark, args)[0])
     assert plan.count("MapInArrow") == 1, plan
     assert plan.count("FileScan") == 1, plan
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert plan.count("Exchange") == 1, plan
+    # token arrays are dropped AT the Python boundary
+    assert "tokens" not in plan.split("MapInArrow")[0], plan

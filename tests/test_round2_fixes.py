@@ -44,10 +44,11 @@ def test_moments_list_array_null_slot_with_extent():
     )
     got = moments_list_array(arr)
     # same power-sum kernel over the COMPACTED buffer (null slot empty)
-    from pulsarfeatureextractor_spark.functions.moments import moments_offsets
+    from pulsarfeatureextractor_spark.functions.moments import moments_segments
 
-    want = moments_offsets(
-        np.array([1, 2, 3, 4, 5], dtype=np.float64), np.array([0, 3, 3, 5])
+    want = moments_segments(
+        np.array([1, 2, 3, 4, 5], dtype=np.float64),
+        starts=np.array([0, 3, 3]), counts=np.array([3, 0, 2]),
     )
     assert np.array_equal(got, want)
     assert (got[1] == 0.0).all()
@@ -62,13 +63,12 @@ def test_moments_segments_gap_never_leaks():
         moments_segments,
     )
 
-    from pulsarfeatureextractor_spark.functions.moments import moments_offsets
-
     # buffer has poison values in the gaps; segments skip them
     buf = np.array([1, 2, 3, 1e30, -1e30, 4, 5, 6, 1e30], dtype=np.float64)
     got = moments_segments(buf, starts=np.array([0, 5]), counts=np.array([3, 3]))
-    want = moments_offsets(
-        np.array([1, 2, 3, 4, 5, 6], dtype=np.float64), np.array([0, 3, 6])
+    want = moments_segments(
+        np.array([1, 2, 3, 4, 5, 6], dtype=np.float64),
+        starts=np.array([0, 3]), counts=np.array([3, 3]),
     )
     assert np.array_equal(got, want)
     assert np.allclose(
@@ -476,25 +476,33 @@ from hypothesis import strategies as st
     st.lists(
         st.tuples(
             st.booleans(),                      # row is valid?
-            st.integers(min_value=0, max_value=9),  # extent (null rows may own one!)
+            st.integers(min_value=0, max_value=17),  # extent (null rows may own one!)
         ),
         min_size=1, max_size=12,
     ),
     st.integers(min_value=0, max_value=1000),
+    st.integers(min_value=0, max_value=11),     # slice start
 )
-def test_moments_list_array_any_layout(rows, seed):
-    """moments_list_array must be exact for EVERY legal Arrow layout:
-    any mix of valid/null slots where null slots may own buffer extent."""
-    import pyarrow as pa
+def test_moments_list_array_any_layout(rows, seed, cut):
+    """Every Arrow kernel must be exact for EVERY legal Arrow layout:
+    any mix of valid/null slots where null slots may own buffer extent,
+    sliced or not.  All three kernels decode the layout through the one
+    ``featureset.list_layout`` helper; each must equal itself on the
+    same rows laid out compactly (fresh array, NULL slots empty)."""
+    from functools import partial
 
     from pulsarfeatureextractor_spark.functions.moments import (
         moments_list_array,
-        moments_offsets,
+        moments_segments,
+    )
+    from pulsarfeatureextractor_spark.functions.scores import (
+        scores_list_array,
+        subband_scores_list_array,
     )
 
     rng = np.random.default_rng(seed)
     values, offsets, mask = [], [0], []
-    compact_vals, compact_offs = [], [0]
+    compact_vals, compact_offs, compact_rows = [], [0], []
     for valid, extent in rows:
         chunk = rng.integers(0, 256, extent).tolist()
         values += chunk
@@ -505,17 +513,26 @@ def test_moments_list_array_any_layout(rows, seed):
             compact_offs.append(compact_offs[-1] + extent)
         else:
             compact_offs.append(compact_offs[-1])
+        compact_rows.append(chunk if valid else None)
     arr = pa.ListArray.from_arrays(
         pa.array(offsets, type=pa.int32()),
         pa.array(values, type=pa.int32()),
         mask=pa.array(mask),
     )
     got = moments_list_array(arr)
-    want = moments_offsets(
+    compact_offs = np.asarray(compact_offs, dtype=np.int64)
+    want = moments_segments(
         np.asarray(compact_vals, dtype=np.float64),
-        np.asarray(compact_offs, dtype=np.int64),
+        compact_offs[:-1], np.diff(compact_offs),
     )
     assert np.array_equal(got, want)
+
+    cut = min(cut, len(rows))
+    for kernel in (moments_list_array, scores_list_array,
+                   partial(subband_scores_list_array, n_chan=2)):
+        for layout, start in ((arr, 0), (arr[cut:], cut)):
+            fresh = pa.array(compact_rows[start:], type=pa.list_(pa.int32()))
+            assert np.array_equal(kernel(layout), kernel(fresh)), (kernel, start)
 
 
 # ------------------------------------------------- RP-LSH lazy dim

@@ -129,7 +129,10 @@ def test_fluent_fused_features(spark):
     from pulsarfeatureextractor_spark.sources.tokenized import synthetic_sequences
 
     ff = FeatureFrame(spark, synthetic_sequences(spark, 100, seed=4))
-    out = ff.fused_features(include_scores=True).df
+    out = ff.features(("lyon", "thornton"), drop=("tokens",)).df
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1
+    assert "tokens" not in plan.split("MapInArrow")[0]
     assert "tokens" not in out.columns
     assert {"mean", "stdev", "sin_chi2", "sn_ratio"} <= set(out.columns)
     assert out.count() == 100

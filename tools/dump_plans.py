@@ -22,7 +22,7 @@ def main() -> None:
 
     import __spark_entry__ as entry
     from pulsarfeatureextractor_spark.operators.asof import asof_join
-    from pulsarfeatureextractor_spark.functions.featureset import fused_features_arrow
+    from pulsarfeatureextractor_spark.functions.featureset import extract_features
     from pulsarfeatureextractor_spark.functions.moments import with_lyon_features
     from pulsarfeatureextractor_spark.session import get_spark
     from pulsarfeatureextractor_spark.sources.readers import load_table
@@ -76,9 +76,9 @@ def main() -> None:
          "output schema already drops the token arrays — exactly one "
          "Python operator and one exchange in the whole pipeline:",
          asof_join(
-             fused_features_arrow(
+             extract_features(
                  seqs.select("doc_id", "event_time", "tokens"),
-                 include_scores=True, drop=("tokens",)),
+                 ("lyon", "thornton"), drop=("tokens",)),
              snaps, on="event_time", right_on="obs_time", by="doc_id",
              value_cols=["f_mean", "f_std"], strategy="window",
          ).select("doc_id", "event_time", "mean", "stdev", "f_mean")),
@@ -130,11 +130,11 @@ def main() -> None:
         "bucket-transform layout); the query is Scan(bucketed) -> Sort "
         "-> Window -> Filter -> one fused PythonMapInArrow — no "
         "Exchange anywhere (the one layout shuffle was paid at ingest):",
-        fused_features_arrow(
+        extract_features(
             asof_bucketed_storage(spark, "plans_asof_union",
                                   on="event_time", by="doc_id",
                                   value_cols=["f_mean", "f_std"]),
-            include_scores=True, drop=("tokens",),
+            ("lyon", "thornton"), drop=("tokens",),
         ).select("doc_id", "event_time", "mean", "stdev", "f_mean"),
     ))
 

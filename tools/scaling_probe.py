@@ -28,7 +28,7 @@ def main() -> None:
     input_dir = sys.argv[2]
     runs = int(sys.argv[3]) if len(sys.argv) > 3 else 2
 
-    from pulsarfeatureextractor_spark.functions.featureset import fused_features_arrow
+    from pulsarfeatureextractor_spark.functions.featureset import extract_features
     from pulsarfeatureextractor_spark.operators.asof import asof_join
     from pulsarfeatureextractor_spark.session import get_spark
     from pulsarfeatureextractor_spark.sources.tokenized import with_event_time
@@ -48,16 +48,15 @@ def main() -> None:
 
     cases = {
         "scan": lambda: scan(),
-        "lyon": lambda: fused_features_arrow(scan(), include_scores=False,
-                                             drop=("tokens",)),
-        "feats": lambda: fused_features_arrow(scan(), include_scores=True,
-                                              drop=("tokens",)),
+        "lyon": lambda: extract_features(scan(), "lyon", drop=("tokens",)),
+        "feats": lambda: extract_features(scan(), ("lyon", "thornton"),
+                                          drop=("tokens",)),
         "join_only": lambda: asof_join(
             scan().drop("tokens"), snaps(), on="event_time", right_on="obs_time",
             by="doc_id", value_cols=["f_mean", "f_std", "f_skew", "f_kurt"],
             strategy="window"),
         "full": lambda: asof_join(
-            fused_features_arrow(scan(), include_scores=True, drop=("tokens",)),
+            extract_features(scan(), ("lyon", "thornton"), drop=("tokens",)),
             snaps(), on="event_time", right_on="obs_time", by="doc_id",
             value_cols=["f_mean", "f_std", "f_skew", "f_kurt"],
             strategy="window"

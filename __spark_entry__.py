@@ -390,21 +390,6 @@ def branded_small_qty_revenue(spark, sf):
     )
 
 
-def asof_merge_plan_purchases(spark, sf):
-    """The SECOND as-of physical plan (co-partitioned pandas merge_asof)
-    against the same DuckDB ASOF oracle as the window plan — the driver
-    gate cross-validates both plans' semantics."""
-    e = load_table(spark, sf, "events")
-    views = e.where(F.col("event_type") == "view").select("event_id", "user_id", "ts")
-    purchases = e.where(F.col("event_type") == "purchase").select(
-        "user_id", "ts", F.col("value").alias("last_purchase_value")
-    )
-    return asof_join(
-        views, purchases, on="ts", by="user_id",
-        value_cols=["last_purchase_value"], strategy="merge_asof",
-    ).select("event_id", "user_id", "ts", "last_purchase_value")
-
-
 def asof_bucketed_plan_purchases(spark, sf):
     """Third as-of physical plan (skew-proof per-(entity, time-bucket)
     windows + carry-in) against the same DuckDB ASOF oracle."""
@@ -1238,13 +1223,9 @@ def training_set_assembly_docs(spark, sf):
         (1 - F.pmod(F.col("doc_id").cast("long"), F.lit(2))).cast("int").alias("label"),
     )
     labels = lab_true.union(lab_decoy)
-    # merge_asof strategy: the co-partitioned applyInPandas plan — this
-    # in-window query carries §2B V2 (grouped-map) coverage now that the
-    # standalone merge-plan variant moved to the tail (all four as-of
-    # plans are property-tested equal in tests/test_asof*.py)
     joined = asof_join(
         feats, labels, on="event_time", right_on="label_time", by="doc_id",
-        value_cols=["label"], strategy="merge_asof",
+        value_cols=["label"], strategy="window",
     )
     return hash_split(joined, "doc_id", seed="sf", hasher="md5").select(
         "doc_id", "event_time",
@@ -2421,8 +2402,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     in-window by lyon8_two_curve_docs' unionByName and
     training_set_assembly_docs' label union) ceded their seats to
     phcx_ingest_docs (A4 reference-format ingest),
-    training_set_assembly_docs (north-star composition, now on the
-    applyInPandas merge plan so V2 keeps in-window coverage),
+    training_set_assembly_docs (north-star composition on the window
+    as-of plan; V2 grouped-map keeps in-window coverage through
+    grouped_moments_event_k's applyInPandas),
     merge_upsert_docs (Iceberg-like MERGE), and eatough_features_docs
     (A9 12-feature closure).
 
@@ -2592,7 +2574,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "chunk_documents_docs": chunk_documents_docs,
         "redact_pii_docs": redact_pii_docs,
         "dedup_against_docs": dedup_against_docs,
-        "asof_merge_plan_purchases": asof_merge_plan_purchases,
         "asof_bucketed_plan_purchases": asof_bucketed_plan_purchases,
         "union_event_slices": union_event_slices,
         "json_props_stats": json_props_stats,
@@ -3106,12 +3087,6 @@ def oracle_sql() -> dict[str, str]:
                OR (p_size >= 40 AND l_quantity <= 5)
         """,
         "asof_bucketed_plan_purchases": """
-            SELECT v.event_id, v.user_id, v.ts, p.value AS last_purchase_value
-            FROM (SELECT event_id, user_id, ts FROM events WHERE event_type = 'view') v
-            ASOF LEFT JOIN (SELECT user_id, ts, value FROM events WHERE event_type = 'purchase') p
-            ON v.user_id = p.user_id AND v.ts >= p.ts
-        """,
-        "asof_merge_plan_purchases": """
             SELECT v.event_id, v.user_id, v.ts, p.value AS last_purchase_value
             FROM (SELECT event_id, user_id, ts FROM events WHERE event_type = 'view') v
             ASOF LEFT JOIN (SELECT user_id, ts, value FROM events WHERE event_type = 'purchase') p

@@ -16,7 +16,9 @@ lag/session features -> resumable partitioned write carrying lineage
 
 Run it on a cluster by dropping --master local overrides; everything
 below is master-agnostic.  Resumability: re-running after a kill
-re-emits only partitions missing from the checkpoint manifest.
+re-emits only partitions missing from the checkpoint manifest.  A
+rerun whose lineage (snapshot, as-of, feature set, gap) differs from
+the checkpoint's is refused: it needs a new --output.
 """
 
 from __future__ import annotations
@@ -74,6 +76,8 @@ def build_pipeline(spark, args):
         "partition_spec_in": manifest["partition_spec"],
         "input_manifest": [f["path"] for f in manifest["files"]],
         "asof": args.asof,
+        "feature_set": feature_set,
+        "gap_seconds": args.gap_seconds,
     }
     return enriched, lineage
 

@@ -12,36 +12,34 @@ plus an optional ``tolerance`` in seconds (matches discarded when
 |t_r - t| > tolerance).  Zero temporal leakage is structural: a
 backward join can only ever read right rows with t_r <= t.
 
-Two interchangeable physical plans (cross-checked in tests, both
-single-shuffle):
+One sort-based core, the window pass (``strategy="window"``, the
+default): tag sides, unionByName, one window
+``partitionBy(entity).orderBy(ts, side)`` carrying the matched right
+row as ONE struct ``(rts, values...)`` through a single
+``last(row, ignorenulls=True)`` over the running frame, keep left rows.
+The struct is the right ROW, so a NULL value in the matched row stays
+NULL instead of being filled from an older row.  All JVM: exchange +
+sort + window, no Python.  ``nearest`` runs a backward and a forward
+running pick over the same exchange (two sorts, never an
+unbounded-following frame) and keeps the closer one.  Scale note: ONE
+shuffle of left+right by entity hash; skew on hot entities handled
+upstream via salting (operators/salt.py) or AQE.
 
-- ``strategy="window"``  — tag sides, unionByName, one window
-  ``partitionBy(entity).orderBy(ts, side)`` with
-  ``last(value, ignorenulls=True)`` over the preceding frame, keep left
-  rows.  All JVM: exchange + sort + window; whole-stage codegen'd
-  except nothing — no Python at all.  Scale note: ONE shuffle of
-  left+right by entity hash; skew on hot entities handled upstream via
-  salting (operators/salt.py) or AQE.
+``asof_self_join`` is the same window pass for the common case where
+the right side is DERIVED from the left (a table joined onto its own
+earlier observations): instead of a union whose two sides each
+re-evaluate the input — two scans, two Python crossings — every input
+row emits its left and right tagged rows at once through
+``inline(array(...))``.  One evaluation of the input, then
+Generate → Exchange → Sort → Window.  The feature job and the flagship
+driver query use it.
 
-  ``asof_self_join`` is the same window plan for the common case where
-  the right side is DERIVED from the left (a table joined onto its own
-  earlier observations): instead of a union whose two sides each
-  re-evaluate the input — two scans, two Python crossings — every input
-  row emits its left and right tagged rows at once through
-  ``inline(array(...))``.  One evaluation of the input, then
-  Generate → Exchange → Sort → Window.  The feature job and the
-  flagship driver query use it.
-
-- ``strategy="merge_asof"`` — co-partition both sides by entity hash,
-  per-group ``pd.merge_asof`` inside ``applyInPandas`` (Arrow-batched).
-  Exists to cross-validate the window plan and to support "nearest"
-  with complex tolerances; the window plan is the default.
-
-Plus three postures for specific regimes (all cross-checked against
-the two above in tests): ``"bucketed"`` (entity × time-bucket salt for
-hot keys), ``"broadcast"`` (small right side aggregated to per-entity
-sorted arrays and broadcast — ZERO shuffle of the big side), and the
-storage plan ``asof_bucketed_storage`` (Exchange-free over a
+Plus three postures for specific regimes, backward/forward only (all
+cross-checked against the window plan in tests): ``"bucketed"``
+(entity × time-bucket salt for hot keys, the same carried struct),
+``"broadcast"`` (small right side aggregated to per-entity sorted
+arrays and broadcast — ZERO shuffle of the big side), and the storage
+plan ``asof_bucketed_storage`` (the window pass, Exchange-free over a
 pre-bucketed table — the 100 TB feature-store posture).
 
 The reference has no joins at all (single-file for-loop; SURVEY.md
@@ -55,13 +53,14 @@ from __future__ import annotations
 from contextlib import contextmanager
 from typing import Iterable
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 _SIDE = "__asof_side"
 _RTS = "__asof_rts"
+_ROW = "__asof_row"
+_DIRECTIONS = ("backward", "forward", "nearest")
 
 _ORDERING_CONF = "spark.sql.legacy.bucketedTableScan.outputOrdering"
 
@@ -104,7 +103,6 @@ def asof_join(
     tolerance: "float | None" = None,
     value_cols: "Iterable[str] | None" = None,
     strategy: str = "window",
-    num_partitions: "int | None" = None,
     bucket_seconds: float = 86400.0,
 ) -> DataFrame:
     """As-of join ``right`` onto ``left``.
@@ -114,11 +112,13 @@ def asof_join(
     on / right_on : timestamp column on each side (right defaults to ``on``)
     by            : entity key column(s)
     value_cols    : right-side columns to attach (default: all non-key)
+    direction     : "backward" (default), "forward", or "nearest"
+                    (window strategy only)
     strategy      : "window" (default, pure JVM, one shuffle),
-                    "merge_asof" (Arrow cogroup), "bucketed" (hot-key
-                    salt by entity × time-bucket), "broadcast" (small
-                    right side — big side never shuffled), or "auto"
-                    (samples left-key skew: window vs bucketed)
+                    "bucketed" (hot-key salt by entity × time-bucket),
+                    "broadcast" (small right side — big side never
+                    shuffled), or "auto" (samples left-key skew: window
+                    vs bucketed)
 
     Output: every left row + attached right columns (null when no match
     within direction/tolerance) — left-join semantics, row count
@@ -129,23 +129,17 @@ def asof_join(
     if value_cols is None:
         value_cols = [c for c in right.columns if c not in (*by_cols, r_on)]
     value_cols = list(value_cols)
-
-    if direction == "nearest":
-        # pandas merge_asof implements nearest natively (backward row
-        # wins exact-distance ties); the window plan stays 2-directional.
-        return _asof_merge(left, right, on, r_on, by_cols, "nearest",
-                           tolerance, value_cols, num_partitions)
-    if direction not in ("backward", "forward"):
-        raise ValueError(f"unknown direction: {direction}")
+    _check_direction(direction)
+    if direction == "nearest" and strategy != "window":
+        raise ValueError(
+            f"direction='nearest' runs on strategy='window' only, "
+            f"not {strategy!r}")
 
     if strategy == "auto":
         strategy = choose_asof_strategy(left, by_cols)
     if strategy == "window":
         return _asof_window(left, right, on, r_on, by_cols, direction,
                             tolerance, value_cols)
-    if strategy == "merge_asof":
-        return _asof_merge(left, right, on, r_on, by_cols, direction,
-                           tolerance, value_cols, num_partitions)
     if strategy == "bucketed":
         return _asof_bucketed(left, right, on, r_on, by_cols, direction,
                               tolerance, value_cols, bucket_seconds)
@@ -228,44 +222,60 @@ def _asof_window_apply(unioned, on, by_cols, direction, tolerance,
     then still per-entity, but a scan already hash-clustered on the
     prefix (a bucketed table) satisfies the window's distribution via
     Spark's subset rule — Exchange-free as-of (SURVEY.md §4)."""
-    part_cols = [*prefix_cols, *by_cols]
-    if direction == "backward":
-        # right rows sort BEFORE left rows at equal ts (side 0 < 1):
-        # a right row at exactly t is visible to a left row at t
-        # (ties include t_r = t — DuckDB semantics).
-        w = (Window.partitionBy(*part_cols)
-             .orderBy(F.col(on).asc(), F.col(_SIDE).asc())
-             .rowsBetween(Window.unboundedPreceding, 0))
-    else:
-        # forward: right rows sort AFTER left rows at equal ts is wrong —
-        # a right row at exactly t must be visible, so order ts desc and
-        # right-first again; last() over preceding = smallest t_r >= t.
-        w = (Window.partitionBy(*part_cols)
-             .orderBy(F.col(on).desc(), F.col(_SIDE).asc())
-             .rowsBetween(Window.unboundedPreceding, 0))
+    _check_direction(direction)
+    part = Window.partitionBy(*prefix_cols, *by_cols)
+    row = F.when(F.col(_SIDE) == 0, F.struct(_RTS, *value_cols))
 
-    filled = unioned
-    for c in value_cols + [_RTS]:
-        filled = filled.withColumn(c, F.last(F.col(c), ignorenulls=True).over(w))
-    out = filled.where(F.col(_SIDE) == 1)
+    def running_pick(descending: bool) -> Column:
+        # right rows sort BEFORE left rows at equal ts (side 0 < 1), so
+        # a right row at exactly t is visible (t_r = t — DuckDB
+        # semantics).  Backward: ts ascending, last right row so far =
+        # greatest t_r <= t.  Forward: the mirror, ts descending.
+        order = F.col(on).desc() if descending else F.col(on).asc()
+        w = (part.orderBy(order, F.col(_SIDE).asc())
+             .rowsBetween(Window.unboundedPreceding, 0))
+        return F.last(row, ignorenulls=True).over(w)
+
+    if direction == "nearest":
+        # both running picks over the one exchange (two sorts); the
+        # closer wins, an equal distance goes backward (pandas)
+        filled = (unioned.withColumn("__asof_back", running_pick(False))
+                  .withColumn(_ROW, running_pick(True)))
+        back, fwd = F.col("__asof_back"), F.col(_ROW)
+        fwd_closer = ((fwd[_RTS] - F.col(on)) < (F.col(on) - back[_RTS]))
+        filled = filled.withColumn(
+            _ROW, F.when(back.isNull() | fwd_closer, fwd).otherwise(back))
+    else:
+        filled = unioned.withColumn(_ROW, running_pick(direction == "forward"))
 
     # SQL join semantics: a NULL entity key or NULL timestamp matches
     # nothing (window partitioning would otherwise group null keys
     # together and diverge from ANSI ASOF / equality-join behavior)
-    null_key = F.lit(False)
+    null_key = F.col(on).isNull()
     for c in by_cols:
         null_key = null_key | F.col(c).isNull()
-    null_key = null_key | F.col(on).isNull()
-    for c in value_cols + [_RTS]:
-        out = out.withColumn(c, F.when(null_key, F.lit(None)).otherwise(F.col(c)))
+    return _expand_row(filled.where(F.col(_SIDE) == 1), on, tolerance,
+                       value_cols, out_cols, no_match=null_key)
 
+
+def _check_direction(direction: str) -> None:
+    if direction not in _DIRECTIONS:
+        raise ValueError(f"unknown as-of direction: {direction!r}")
+
+
+def _expand_row(df, on, tolerance, value_cols, out_cols,
+                no_match: "Column | None" = None) -> DataFrame:
+    """Null the matched right row (struct ``_ROW``) once — ``no_match``
+    or outside ``tolerance`` — then expand its value fields."""
     if tolerance is not None:
         # cast-to-double keeps sub-second precision (unix_timestamp truncates)
-        delta = F.abs(F.col(on).cast("double") - F.col(_RTS).cast("double"))
-        out_of_tol = F.col(_RTS).isNull() | (delta > F.lit(float(tolerance)))
-        for c in value_cols:
-            out = out.withColumn(c, F.when(out_of_tol, F.lit(None)).otherwise(F.col(c)))
-    return out.select(*out_cols, *value_cols)
+        delta = F.abs(F.col(on).cast("double") - F.col(_ROW)[_RTS].cast("double"))
+        out_of_tol = delta > F.lit(float(tolerance))
+        no_match = out_of_tol if no_match is None else no_match | out_of_tol
+    out = df
+    if no_match is not None:
+        out = out.withColumn(_ROW, F.when(no_match, F.lit(None)).otherwise(F.col(_ROW)))
+    return out.select(*out_cols, *[F.col(_ROW)[c].alias(c) for c in value_cols])
 
 
 def _asof_window(left, right, on, r_on, by_cols, direction, tolerance,
@@ -307,7 +317,7 @@ def asof_self_join(
     by_cols = _normalize_cols(by)
     if direction not in ("backward", "forward"):
         raise ValueError(f"asof_self_join: unknown direction {direction}")
-    clash = [n for n in values if n in df.columns or n in (_SIDE, _RTS)]
+    clash = [n for n in values if n in df.columns or n in (_SIDE, _RTS, _ROW)]
     if clash:
         raise ValueError(f"asof_self_join: value names {clash} already in df")
     value_cols = list(values)
@@ -369,11 +379,12 @@ def _asof_broadcast(left, right, on, r_on, by_cols, direction, tolerance,
     for c in by_cols:
         r_clean = r_clean.where(F.col(c).isNotNull())
     entry = F.struct(
-        F.col(r_on).cast(axis_type).alias("__t"),
+        F.col(r_on).cast(axis_type).alias(_RTS),
         *[F.col(c) for c in value_cols],
     )
-    # sort_array orders struct fields lexicographically — __t first, so
-    # the array is time-ascending; one Exchange total (this small agg)
+    # sort_array orders struct fields lexicographically — the time
+    # first, so the array is time-ascending; one Exchange total (this
+    # small agg)
     per_entity = (
         r_clean.groupBy(*by_cols)
         .agg(F.sort_array(F.collect_list(entry)).alias("__arr"))
@@ -384,23 +395,13 @@ def _asof_broadcast(left, right, on, r_on, by_cols, direction, tolerance,
     # null pick; a NULL left ts -> predicate null -> empty filter ->
     # null pick: ANSI join semantics fall out structurally.
     if direction == "backward":
-        matches = F.filter(F.col("__arr"), lambda s: s["__t"] <= F.col(on))
+        matches = F.filter(F.col("__arr"), lambda s: s[_RTS] <= F.col(on))
         pick = F.try_element_at(matches, F.lit(-1))
     else:
-        matches = F.filter(F.col("__arr"), lambda s: s["__t"] >= F.col(on))
+        matches = F.filter(F.col("__arr"), lambda s: s[_RTS] >= F.col(on))
         pick = F.try_element_at(matches, F.lit(1))
-    out = joined.withColumn("__pick", pick)
-    if tolerance is not None:
-        delta = F.abs(F.col(on).cast("double") -
-                      F.col("__pick")["__t"].cast("double"))
-        out = out.withColumn(
-            "__pick",
-            F.when(delta <= F.lit(float(tolerance)), F.col("__pick")),
-        )
-    return out.select(
-        *left.columns,
-        *[F.col("__pick")[c].alias(c) for c in value_cols],
-    )
+    return _expand_row(joined.withColumn(_ROW, pick), on, tolerance,
+                       value_cols, left.columns)
 
 
 def prepare_bucketed_asof_table(
@@ -606,10 +607,10 @@ def _asof_bucketed(left, right, on, r_on, by_cols, direction, tolerance,
     """Skew-proof backward as-of: per-(entity, time-bucket) windows plus
     a carry-in as-of over tiny per-bucket summaries.
 
-    The window and merge_asof plans partition by ENTITY — a hot entity
-    (north_star: hot doc_id/source keys) serializes into one task, and
-    neither salting nor AQE helps window skew.  Here the partition key
-    is (entity, floor(ts / B)):
+    The window plan partitions by ENTITY — a hot entity (north_star:
+    hot doc_id/source keys) serializes into one task, and neither
+    salting nor AQE helps window skew.  Here the partition key is
+    (entity, floor(ts / B)):
 
       pass 1: union + window within (entity, bucket) — the hot entity's
               rows spread over #buckets tasks;
@@ -618,35 +619,20 @@ def _asof_bucketed(left, right, on, r_on, by_cols, direction, tolerance,
               summary as-of bucket b-1 (an as-of join again, but on the
               tiny summary — recursion bottoms out on the window plan);
       pass 3: broadcast/hash join carry-ins back by (entity, bucket),
-              coalesce within-bucket fills with the carry-in.
+              coalesce within-bucket picks with the carry-in.
 
-    Equality with the window plan is property-tested on skewed and
-    random fixtures, both directions.  Forward is the mirror image:
-    within-bucket window over DESCENDING ts, summaries keep the FIRST
-    right row per bucket, carry-in comes from bucket b+1 onward.
+    Every pass carries the right row as one struct ``(rts, values...)``
+    — the window plan's row — so a NULL value is never filled from an
+    older row.  Equality with the window plan is property-tested on
+    skewed and random fixtures, both directions.  Forward is the mirror
+    image: within-bucket window over DESCENDING ts, summaries keep the
+    FIRST right row per bucket, carry-in comes from bucket b+1 onward.
     """
-    if direction not in ("backward", "forward"):
-        raise ValueError(f"bucketed strategy: unknown direction {direction}")
     fwd = direction == "forward"
     B = float(bucket_seconds)
-    l_cols = left.columns
-
-    bkt_of_on = F.floor(F.col(on).cast("double") / B).cast("long")
-
-    l_tagged = (left.withColumn(_SIDE, F.lit(1))
-                .withColumn(_RTS, F.lit(None).cast("timestamp"))
-                .withColumn(_BKT, bkt_of_on))
-    for c in value_cols:
-        l_tagged = l_tagged.withColumn(c, F.lit(None).cast(right.schema[c].dataType))
-    r_clean = right.where(F.col(r_on).isNotNull())
-    for c in by_cols:
-        r_clean = r_clean.where(F.col(c).isNotNull())
-    r_proj = r_clean.select(
-        *[F.col(c) for c in by_cols],
-        F.col(r_on).cast("timestamp").alias(on),
-        F.col(r_on).cast("timestamp").alias(_RTS),
-        *[F.col(c) for c in value_cols],
-    ).withColumn(_SIDE, F.lit(0)).withColumn(_BKT, bkt_of_on)
+    unioned = (_asof_tag_union(left, right, on, r_on, by_cols, value_cols)
+               .withColumn(_BKT, F.floor(F.col(on).cast("double") / B).cast("long")))
+    row = F.struct(_RTS, *value_cols)
 
     # pass 1: within-bucket window (right rows visible at equal ts);
     # forward = mirror: descending ts, right still first at equal ts
@@ -654,21 +640,16 @@ def _asof_bucketed(left, right, on, r_on, by_cols, direction, tolerance,
     w = (Window.partitionBy(*by_cols, _BKT)
          .orderBy(order, F.col(_SIDE).asc())
          .rowsBetween(Window.unboundedPreceding, 0))
-    filled = l_tagged.unionByName(r_proj, allowMissingColumns=True)
-    for c in value_cols + [_RTS]:
-        filled = filled.withColumn(c, F.last(F.col(c), ignorenulls=True).over(w))
-    filled = filled.where(F.col(_SIDE) == 1)
+    filled = (unioned.withColumn(
+        _ROW, F.last(F.when(F.col(_SIDE) == 0, row), ignorenulls=True).over(w))
+        .where(F.col(_SIDE) == 1))
 
     # pass 2: per-bucket boundary-right summaries (backward: LAST right
     # row; forward: FIRST), then carry-in as-of on the bucket axis
     # (tiny: one row per entity x non-empty bucket)
-    boundary = F.max(_RTS) if not fwd else F.min(_RTS)
-    pick = F.max_by if not fwd else F.min_by
-    summary = r_proj.groupBy(*by_cols, _BKT).agg(
-        boundary.alias(_RTS),
-        *[pick(c, F.col(_RTS)).alias(c) for c in value_cols],
-    )
-    carry_cols = [f"__carry_{c}" for c in value_cols + [_RTS]]
+    pick = F.min_by if fwd else F.max_by
+    summary = (unioned.where(F.col(_SIDE) == 0).groupBy(*by_cols, _BKT)
+               .agg(pick(row, F.col(_RTS)).alias("__carry")))
     # carry-in for bucket b: nearest summary bucket strictly before
     # (backward) / after (forward) b — itself an as-of on the bucket
     # index, negated for forward so the backward machinery applies
@@ -677,83 +658,12 @@ def _asof_bucketed(left, right, on, r_on, by_cols, direction, tolerance,
                     .withColumn("__qb", sign * F.col(_BKT) - 1))
     carry = _asof_window(
         left_buckets,
-        summary.select(
-            *by_cols, (sign * F.col(_BKT)).alias("__qb"),
-            *[F.col(c).alias(f"__carry_{c}") for c in value_cols + [_RTS]],
-        ),
+        summary.select(*by_cols, (sign * F.col(_BKT)).alias("__qb"), "__carry"),
         on="__qb", r_on="__qb", by_cols=by_cols, direction="backward",
-        tolerance=None, value_cols=carry_cols, axis_type="long",
+        tolerance=None, value_cols=["__carry"], axis_type="long",
     ).drop("__qb")
 
-    # pass 3: coalesce within-bucket fill with carry-in
-    out = filled.join(carry, [*by_cols, _BKT], "left")
-    for c in value_cols + [_RTS]:
-        out = out.withColumn(c, F.coalesce(F.col(c), F.col(f"__carry_{c}")))
-
-    if tolerance is not None:
-        delta = F.abs(F.col(on).cast("double") - F.col(_RTS).cast("double"))
-        out_of_tol = F.col(_RTS).isNull() | (delta > F.lit(float(tolerance)))
-        for c in value_cols:
-            out = out.withColumn(c, F.when(out_of_tol, F.lit(None)).otherwise(F.col(c)))
-    return out.select(*l_cols, *value_cols)
-
-
-def _asof_merge(left, right, on, r_on, by_cols, direction, tolerance,
-                value_cols, num_partitions) -> DataFrame:
-    """Range/hash co-partitioned pandas merge_asof plan.
-
-    Physical shape: both sides repartitioned by entity hash (one
-    shuffle each), cogrouped, per-group sorted merge in Arrow batches.
-    Group = one entity's rows — hot entities should be rare on the
-    right side (feature snapshots); pandas groups do not spill, hence
-    the window plan is the scale default (SURVEY.md §4).
-    """
-    from pyspark.sql import types as T
-
-    l_cols = left.columns
-    # copy: StructType.add mutates in place and df.schema is cached
-    out_schema = T.StructType(list(left.schema.fields))
-    for c in value_cols:
-        out_schema = out_schema.add(c, right.schema[c].dataType, True)
-
-    l_part = left
-    r_part = right.select(*by_cols, F.col(r_on).alias(r_on), *value_cols)
-    r_part = r_part.where(F.col(r_on).isNotNull())
-    for c in by_cols:
-        r_part = r_part.where(F.col(c).isNotNull())
-    if num_partitions:
-        l_part = l_part.repartition(num_partitions, *by_cols)
-        r_part = r_part.repartition(num_partitions, *by_cols)
-
-    def merge(key, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        # null left timestamps match nothing (SQL semantics) and would
-        # break merge_asof's sort requirement — split them out
-        null_ts = lpdf[lpdf[on].isna()]
-        lpdf = lpdf[lpdf[on].notna()]
-        lpdf = lpdf.sort_values(on, kind="mergesort").reset_index(drop=True)
-        if rpdf.empty or lpdf.empty:
-            res = pd.concat([lpdf, null_ts], ignore_index=True)
-            for c in value_cols:
-                res[c] = None
-            return res[l_cols + value_cols]
-        rpdf = rpdf.sort_values(r_on, kind="mergesort").reset_index(drop=True)
-        tol = pd.Timedelta(seconds=tolerance) if tolerance is not None else None
-        res = pd.merge_asof(
-            lpdf, rpdf[[r_on] + value_cols],
-            left_on=on, right_on=r_on,
-            direction=direction, tolerance=tol,
-            allow_exact_matches=True,
-        )
-        if len(null_ts):
-            nt = null_ts.copy()
-            for c in value_cols:
-                nt[c] = None
-            res = pd.concat([res[l_cols + value_cols], nt[l_cols + value_cols]],
-                            ignore_index=True)
-        return res[l_cols + value_cols]
-
-    return (
-        l_part.groupBy(*by_cols)
-        .cogroup(r_part.groupBy(*by_cols))
-        .applyInPandas(merge, schema=out_schema)
-    )
+    # pass 3: coalesce the within-bucket pick with the carry-in
+    out = (filled.join(carry, [*by_cols, _BKT], "left")
+           .withColumn(_ROW, F.coalesce(_ROW, "__carry")))
+    return _expand_row(out, on, tolerance, value_cols, left.columns)

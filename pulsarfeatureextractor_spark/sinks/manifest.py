@@ -10,10 +10,9 @@ the *surface the north rule needs* on plain parquet + JSON sidecars:
 - **time travel**: read the table as of any snapshot id (reads exactly
   the files that snapshot's manifest lists — late files are invisible).
 
-On a real cluster with ``iceberg-spark-runtime`` on the classpath the
-same call sites switch to ``spark.read.format("iceberg")`` — the gate
-is ``use_real_iceberg()``; semantics here intentionally mirror
-Iceberg's snapshot/manifest model so the swap is config-only.
+The semantics mirror Iceberg's snapshot/manifest model; nothing here
+switches to a real Iceberg catalog, so moving to ``iceberg-spark-runtime``
+means changing the call sites to ``spark.read.format("iceberg")``.
 
 Commit protocol (crash safety without table-format transactions):
 data files are written into an immutable ``data/snap-<uuid>/``
@@ -48,12 +47,6 @@ def _uri_local_path(p: str) -> str:
     if u.scheme in ("", "file"):
         return unquote(u.path) or p
     return p
-
-
-def use_real_iceberg(spark: SparkSession) -> bool:
-    """True when an Iceberg catalog is configured (cluster mode)."""
-    confs = spark.sparkContext.getConf().getAll()
-    return any(k.startswith("spark.sql.catalog.") for k, _ in confs)
 
 
 def _fsync_write_json(path: str, obj: dict) -> None:

@@ -110,6 +110,22 @@ def resume_plan(
     )
 
 
+def _refuse_stale_resume(ckpt: dict, lineage: dict, checkpoint_path: str) -> None:
+    """A done key is skipped only when it was written from this run's
+    lineage: a rerun after a new snapshot, or with another feature set,
+    would otherwise keep the old rows and report nothing to write.
+    Compared in the checkpoint's JSON form (written with ``default=str``)."""
+    want = json.loads(json.dumps(lineage, default=str))
+    for key, info in ckpt["done"].items():
+        for field, value in want.items():
+            if info.get(field) != value:
+                raise ValueError(
+                    f"checkpoint {checkpoint_path} holds partition {key!r} "
+                    f"written with {field}={info.get(field)!r}, but this run "
+                    f"has {field}={value!r}; resuming would mix the two in "
+                    "one output — write to a new --output instead")
+
+
 def run_partitioned_job(
     df: DataFrame,
     out_dir: str,
@@ -130,6 +146,9 @@ def run_partitioned_job(
       batch and the rerun re-emits exactly the missing partitions.
     - ``fail_after_batches`` (tests only): simulate a mid-run kill.
 
+    A checkpointed key is only skipped when its recorded lineage equals
+    ``lineage``; any difference raises ``ValueError`` naming the field.
+
     Scale note: ``batch_size=0`` evaluates ``df`` once — one SQL
     execution, no planning job.  The completed keys are filtered out
     with ``isin`` and the written keys come back through the write's
@@ -143,6 +162,7 @@ def run_partitioned_job(
     part_cols = list(partition_cols)
     lineage = lineage or {}
     ckpt = load_checkpoint(checkpoint_path)
+    _refuse_stale_resume(ckpt, lineage, checkpoint_path)
     skipped = sorted(ckpt["done"].keys())
     key_expr = _partition_key_expr(part_cols)
 

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from typing import Iterable
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -170,9 +171,10 @@ def streaming_asof_state(
     """X4: stateful streaming AS-OF — the online twin of the batch
     backward as-of join.
 
-    One event stream carries both sides; per-entity state is the last
-    right-side value (exactly the state a 10^12-row feature store needs
-    per entity — one row, watermark-bounded).  Within each trigger the
+    One event stream carries both sides; per-entity state is the value
+    of the last right-side row, NULL included (exactly the state a
+    10^12-row feature store needs per entity — one row,
+    watermark-bounded).  Within each trigger the
     key's rows are folded in (ts, side) order with right rows visible
     at equal ts — the same tie convention as the batch window plan and
     DuckDB ASOF; across triggers the state seeds the fold.  Left rows
@@ -191,21 +193,25 @@ def streaming_asof_state(
             pdf = pdf.assign(__side=side).sort_values(
                 ["ts", "__side", "event_id"], kind="mergesort"
             )
-            rvals = pdf["value"].where(pdf["event_type"] == right_type)
-            filled = rvals.ffill()
-            if last is not None:
-                filled = filled.fillna(last)
-            nonnull = rvals.dropna()
-            if len(nonnull):
-                last = float(nonnull.iloc[-1])
-            lefts = pdf[pdf["event_type"] == left_type]
-            if lefts.empty:
+            # each row takes the value of the LAST right row so far,
+            # whatever it is (a NULL stays NULL, as in the batch join);
+            # rows with no right row earlier in the trigger take the state
+            is_right = (pdf["event_type"] == right_type).to_numpy()
+            vals = pdf["value"].to_numpy(dtype=float, na_value=np.nan)
+            pos = np.maximum.accumulate(
+                np.where(is_right, np.arange(len(pdf)), -1))
+            seed = np.nan if last is None else last
+            filled = np.where(pos >= 0, vals[pos], seed)
+            if pos[-1] >= 0:
+                last = None if np.isnan(vals[pos[-1]]) else float(vals[pos[-1]])
+            if is_right.all():
                 continue
+            lefts = pdf[~is_right]
             yield pd.DataFrame({
                 "user_id": user_id,
                 "event_id": lefts["event_id"],
                 "ts": lefts["ts"],
-                "last_purchase_value": filled[lefts.index],
+                "last_purchase_value": filled[~is_right],
             })
         state.update((last,))
 

@@ -1,5 +1,6 @@
-"""As-of join: both physical plans vs pandas merge_asof, tie semantics,
-tolerance, forward direction, and the zero-temporal-leakage property."""
+"""As-of join: every physical plan vs pandas merge_asof, tie semantics,
+tolerance, forward and nearest directions, NULL right values, and the
+zero-temporal-leakage property."""
 
 from __future__ import annotations
 
@@ -10,9 +11,20 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from pulsarfeatureextractor_spark.operators.asof import asof_join, asof_self_join
+from pulsarfeatureextractor_spark.operators.asof import (
+    asof_bucketed_storage,
+    asof_join,
+    asof_self_join,
+    prepare_bucketed_asof_table,
+)
 
 EPOCH = pd.Timestamp("2024-01-01")
+_STRATEGIES = ("window", "bucketed", "broadcast")
+
+
+def _plans(direction):
+    """``nearest`` runs on the window plan only."""
+    return ("window",) if direction == "nearest" else _STRATEGIES
 
 
 def _random_tables(seed: int, n_left=400, n_right=300, n_entities=25):
@@ -53,13 +65,13 @@ def _canon(pdf: pd.DataFrame) -> pd.DataFrame:
 
 
 @pytest.mark.parametrize("seed", [1, 2, 3])
-@pytest.mark.parametrize("direction", ["backward", "forward"])
+@pytest.mark.parametrize("direction", ["backward", "forward", "nearest"])
 def test_both_plans_match_pandas(spark, seed, direction):
     left, right = _random_tables(seed)
     ldf = spark.createDataFrame(left)
     rdf = spark.createDataFrame(right)
     want = _canon(_pandas_asof(left, right, direction))
-    for strategy in ("window", "merge_asof", "bucketed", "broadcast"):
+    for strategy in _plans(direction):
         got = asof_join(
             ldf, rdf, on="ts", by="entity", direction=direction,
             strategy=strategy, bucket_seconds=600.0,
@@ -73,20 +85,21 @@ def test_tolerance(spark, tolerance):
     left, right = _random_tables(5)
     ldf = spark.createDataFrame(left)
     rdf = spark.createDataFrame(right)
-    want = _canon(_pandas_asof(left, right, "backward", tolerance))
-    for strategy in ("window", "merge_asof", "bucketed", "broadcast"):
-        got = _canon(asof_join(
-            ldf, rdf, on="ts", by="entity", tolerance=tolerance,
-            strategy=strategy, bucket_seconds=600.0,
-        ).toPandas())
-        pd.testing.assert_frame_equal(got, want, check_dtype=False, rtol=1e-12)
+    for direction in ("backward", "nearest"):
+        want = _canon(_pandas_asof(left, right, direction, tolerance))
+        for strategy in _plans(direction):
+            got = _canon(asof_join(
+                ldf, rdf, on="ts", by="entity", tolerance=tolerance,
+                direction=direction, strategy=strategy, bucket_seconds=600.0,
+            ).toPandas())
+            pd.testing.assert_frame_equal(got, want, check_dtype=False, rtol=1e-12)
 
 
 def test_exact_tie_matches(spark):
     """A right row at exactly t must be visible to a left row at t."""
     left = pd.DataFrame({"entity": ["a"], "ts": [EPOCH], "lval": [1.0]})
     right = pd.DataFrame({"entity": ["a"], "ts": [EPOCH], "rval": [9.0]})
-    for strategy in ("window", "merge_asof", "bucketed", "broadcast"):
+    for strategy in _STRATEGIES:
         got = asof_join(
             spark.createDataFrame(left), spark.createDataFrame(right),
             on="ts", by="entity", strategy=strategy,
@@ -99,7 +112,7 @@ def test_no_match_yields_null(spark):
     right = pd.DataFrame({
         "entity": ["a"], "ts": [EPOCH + pd.Timedelta(seconds=10)], "rval": [9.0]
     })
-    for strategy in ("window", "merge_asof", "bucketed", "broadcast"):
+    for strategy in _STRATEGIES:
         got = asof_join(
             spark.createDataFrame(left), spark.createDataFrame(right),
             on="ts", by="entity", strategy=strategy,
@@ -136,7 +149,7 @@ def test_zero_temporal_leakage(spark):
 
 def test_null_keys_and_timestamps_sql_semantics(spark):
     """NULL entity keys / timestamps never match, on either side —
-    ANSI equality-join semantics, pinned across all four plans."""
+    ANSI equality-join semantics, pinned across all three plans."""
     left = pd.DataFrame({
         "entity": ["a", None, "a", "b"],
         "ts": [EPOCH + pd.Timedelta(seconds=10), EPOCH + pd.Timedelta(seconds=10),
@@ -148,7 +161,7 @@ def test_null_keys_and_timestamps_sql_semantics(spark):
         "ts": [EPOCH, EPOCH, pd.NaT, pd.NaT],
         "rval": [10.0, 20.0, 30.0, 40.0],
     })
-    for strategy in ("window", "merge_asof", "bucketed", "broadcast"):
+    for strategy in _STRATEGIES:
         got = asof_join(
             spark.createDataFrame(left), spark.createDataFrame(right),
             on="ts", by="entity", strategy=strategy,
@@ -253,7 +266,8 @@ def test_self_join_equals_two_pass(spark, seed, direction, tolerance):
 def test_self_join_nulls_and_duplicates_by_hand(spark, direction):
     """Pinned values: NULL doc_id / event_time rows match nothing; a
     NULL n_tok row yields no observation but still gets one; duplicate
-    (doc_id, event_time) rows get the same fill."""
+    (doc_id, event_time) rows get the same fill; a matched observation
+    with a NULL value fills NULL."""
     t = lambda s: _T0 + dt.timedelta(seconds=s)  # noqa: E731
     rows = [
         (0, "a", t(100), 10, 1.0, 0.1),    # obs at 90
@@ -264,6 +278,8 @@ def test_self_join_nulls_and_duplicates_by_hand(spark, direction):
         (5, "b", t(10), 0, 6.0, 0.6),      # obs == event_time: exact tie
         (6, "c", t(50), None, 7.0, 0.7),   # "c" has no valid observation:
         (7, "c", None, 5, 8.0, 0.8),       # NULL-time ones must not leak
+        (8, "d", t(100), 2, None, 0.9),    # obs at 98 with a NULL value:
+        (9, "d", t(99), 50, 9.0, 1.0),     # matched, not skipped for obs 49
     ]
     got, want = _self_vs_two_pass(spark.createDataFrame(rows, _SELF_SCHEMA),
                                   direction)
@@ -271,10 +287,10 @@ def test_self_join_nulls_and_duplicates_by_hand(spark, direction):
     fill = {r[0]: r[-2] for r in got}
     if direction == "backward":
         assert fill == {0: 1.0, 1: 1.0, 2: 1.0, 3: None, 4: None, 5: 6.0,
-                        6: None, 7: None}
+                        6: None, 7: None, 8: None, 9: None}
     else:
         assert fill == {0: None, 1: None, 2: None, 3: None, 4: None, 5: 6.0,
-                        6: None, 7: None}
+                        6: None, 7: None, 8: None, 9: None}
 
 
 def test_self_join_empty_input(spark):
@@ -290,3 +306,80 @@ def test_self_join_rejects_bad_arguments(spark):
     with pytest.raises(ValueError, match="direction"):
         asof_self_join(df, "event_time", "doc_id", obs, {"m": F.col("mean")},
                        direction="nearest")
+
+
+# ---- nearest ties, NULL right values, argument checks
+
+def test_nearest_equal_distance_goes_backward(spark):
+    t = lambda s: EPOCH + pd.Timedelta(seconds=s)  # noqa: E731
+    left = pd.DataFrame({"entity": ["a"] * 4, "ts": [t(10), t(12), t(3), t(40)],
+                         "lval": [1.0, 2.0, 3.0, 4.0]})
+    right = pd.DataFrame({"entity": ["a", "a"], "ts": [t(5), t(15)],
+                          "rval": [50.0, 150.0]})
+    out = asof_join(spark.createDataFrame(left), spark.createDataFrame(right),
+                    on="ts", by="entity", direction="nearest")
+    # t=10: both 5 s away -> backward; t=12: forward closer; t=3 / t=40:
+    # only one side exists
+    assert out.toPandas().sort_values("lval")["rval"].tolist() == [
+        50.0, 150.0, 50.0, 150.0]
+    # one exchange, two running frames, never an unbounded-following one
+    plan = (out._jdf.queryExecution().executedPlan().toString()
+            .split("== Initial Plan ==")[0])
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert plan.count("Window [") == 2, plan
+    assert "unboundedfollowing" not in plan.lower(), plan
+
+
+_T = lambda s: EPOCH + pd.Timedelta(seconds=s)  # noqa: E731
+# backward from t=10, forward from t=6 and nearest from t=10 all match
+# the t=8 row, whose value is NULL
+_NULL_LEFT = pd.DataFrame({"entity": ["a", "a"], "ts": [_T(10), _T(6)],
+                           "lval": [1.0, 2.0]})
+_NULL_RIGHT = pd.DataFrame({"entity": ["a"] * 3, "ts": [_T(5), _T(8), _T(20)],
+                            "rval": [1.0, None, 2.0]})
+
+
+@pytest.fixture(scope="module")
+def null_value_table(spark, tmp_path_factory):
+    name = "asof_null_value_tbl"
+    prepare_bucketed_asof_table(
+        spark.createDataFrame(_NULL_LEFT), spark.createDataFrame(_NULL_RIGHT),
+        name, str(tmp_path_factory.mktemp("asof_null") / "tbl"),
+        on="ts", by="entity", value_cols=["rval"], n_buckets=2,
+    )
+    return name
+
+
+@pytest.mark.parametrize("direction", ["backward", "forward", "nearest"])
+def test_null_right_value_is_not_skipped(spark, null_value_table, direction):
+    """DuckDB ASOF and pandas return the matched row's NULL value, not
+    the value of an older row."""
+    ldf = spark.createDataFrame(_NULL_LEFT)
+    rdf = spark.createDataFrame(_NULL_RIGHT)
+    want = _canon(_pandas_asof(_NULL_LEFT, _NULL_RIGHT, direction))
+    assert want["rval"].isna().sum() == 1
+    outs = {s: asof_join(ldf, rdf, on="ts", by="entity", direction=direction,
+                         strategy=s, bucket_seconds=7.0)
+            for s in _plans(direction)}
+    outs["storage"] = asof_bucketed_storage(
+        spark, null_value_table, on="ts", by="entity", value_cols=["rval"],
+        direction=direction)
+    for name, out in outs.items():
+        pd.testing.assert_frame_equal(_canon(out.toPandas()), want,
+                                      check_dtype=False, obj=name)
+
+
+def test_asof_rejects_removed_and_unsupported_arguments(spark, null_value_table):
+    ldf = spark.createDataFrame(_NULL_LEFT)
+    rdf = spark.createDataFrame(_NULL_RIGHT)
+    with pytest.raises(ValueError, match="strategy"):
+        asof_join(ldf, rdf, on="ts", by="entity", strategy="merge_asof")
+    for strategy in ("bucketed", "broadcast", "auto"):
+        with pytest.raises(ValueError, match="nearest"):
+            asof_join(ldf, rdf, on="ts", by="entity", direction="nearest",
+                      strategy=strategy)
+    with pytest.raises(ValueError, match="direction"):
+        asof_join(ldf, rdf, on="ts", by="entity", direction="backwards")
+    with pytest.raises(ValueError, match="direction"):
+        asof_bucketed_storage(spark, null_value_table, on="ts", by="entity",
+                              value_cols=["rval"], direction="backwrd")

@@ -53,6 +53,47 @@ def test_job_end_to_end(spark, table_dir, tmp_path):
     assert res2["written"] == []
 
 
+def test_job_refuses_stale_resume(spark, tmp_path, monkeypatch):
+    """A kill-and-resume with the same arguments resumes; a rerun into
+    the same output after a new snapshot (or with another feature set)
+    must fail instead of skipping every partition and keeping the old
+    rows."""
+    import functools
+
+    from pulsarfeatureextractor_spark.sinks import partitioned
+    from pulsarfeatureextractor_spark.sinks.manifest import IcebergLikeTable
+    from pulsarfeatureextractor_spark.sources.tokenized import synthetic_sequences
+
+    sys.path.insert(0, os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs"))
+    import extract_features
+
+    d = str(tmp_path / "table")
+    table = IcebergLikeTable(d)
+    table.write(synthetic_sequences(spark, 300, seed=21), partition_by=["source"])
+    out = str(tmp_path / "out")
+    args = ["--input", d, "--output", out, "--batch-size", "8"]
+
+    run = partitioned.run_partitioned_job
+    monkeypatch.setattr(partitioned, "run_partitioned_job",
+                        functools.partial(run, fail_after_batches=1))
+    with pytest.raises(RuntimeError, match="simulated kill"):
+        extract_features.main(args)
+    monkeypatch.setattr(partitioned, "run_partitioned_job", run)
+    res = extract_features.main(args)
+    assert len(res["skipped"]) == 8 and len(res["written"]) == 12
+    assert spark.read.parquet(out).count() == 300
+
+    table.write(synthetic_sequences(spark, 300, seed=22), partition_by=["source"])
+    with pytest.raises(ValueError, match="snapshot_id.*new --output"):
+        extract_features.main(args)
+    with pytest.raises(ValueError, match="feature_set"):
+        extract_features.main([*args, "--snapshot", "1", "--feature-set", "stats"])
+    # nothing was rewritten: the output still holds snapshot 1's rows
+    assert spark.read.parquet(out).count() == 300
+    assert extract_features.main([*args, "--snapshot", "1"])["written"] == []
+
+
 @pytest.mark.slow
 def test_job_via_spark_submit(table_dir, tmp_path):
     """The literal deployment path: spark-submit --py-files."""

@@ -116,22 +116,43 @@ def test_streaming_asof_matches_batch_asof(spark, events_dir, tmp_path):
     from pulsarfeatureextractor_spark.operators.asof import asof_join
     from pulsarfeatureextractor_spark.streaming.mirror import streaming_asof_state
 
-    stream = stream_events_from_table(spark, events_dir)
-    got = _run(streaming_asof_state(stream), "t_asof", spark, str(tmp_path))
-
+    # the same events with every third purchase value NULL: the as-of
+    # value is the matched row's, so a NULL must not be filled from an
+    # older purchase on either side
     e = spark.read.parquet(events_dir)
-    views = e.where(F.col("event_type") == "view").select("event_id", "user_id", "ts")
-    purchases = e.where(F.col("event_type") == "purchase").select(
-        "user_id", "ts", F.col("value").alias("last_purchase_value")
-    )
-    batch = asof_join(
-        views, purchases, on="ts", by="user_id",
-        value_cols=["last_purchase_value"], strategy="window",
-    ).toPandas()
-    a, b = _canon(got), _canon(batch)
-    assert len(a) == len(b)
-    assert np.allclose(a["last_purchase_value"].fillna(-9e9),
-                       b["last_purchase_value"].fillna(-9e9))
+    nulled_dir = str(tmp_path / "events_null_values")
+    e.withColumn("value", F.when(
+        (F.col("event_type") == "purchase") & (F.col("event_id") % 3 == 0),
+        F.lit(None)).otherwise(F.col("value"))
+    ).coalesce(1).write.parquet(nulled_dir)
+
+    n_null = []
+    for name, src in (("t_asof", events_dir), ("t_asof_null", nulled_dir)):
+        stream = stream_events_from_table(spark, src)
+        got = _run(streaming_asof_state(stream), name, spark, str(tmp_path))
+
+        e = spark.read.parquet(src)
+        views = e.where(F.col("event_type") == "view").select("event_id", "user_id", "ts")
+        purchases = e.where(F.col("event_type") == "purchase").select(
+            "user_id", "ts", F.col("value").alias("last_purchase_value")
+        )
+        batch = asof_join(
+            views, purchases, on="ts", by="user_id",
+            value_cols=["last_purchase_value"], strategy="window",
+        ).toPandas()
+        # independent reference: pandas merge_asof (matched row's value)
+        ref = pd.merge_asof(
+            views.toPandas().sort_values("ts", kind="mergesort"),
+            purchases.toPandas().sort_values("ts", kind="mergesort"),
+            on="ts", by="user_id",
+        )
+        a, b, c = _canon(got), _canon(batch), _canon(ref)
+        assert len(a) == len(b) == len(c)
+        for other in (b, c):
+            assert np.allclose(a["last_purchase_value"].fillna(-9e9),
+                               other["last_purchase_value"].fillna(-9e9))
+        n_null.append(int(a["last_purchase_value"].isna().sum()))
+    assert n_null[1] > n_null[0]  # the NULL values were matched
 
 
 def test_streaming_lyon_features_match_batch(spark, tmp_path):

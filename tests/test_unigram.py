@@ -204,3 +204,34 @@ def test_train_unigram_empty_corpus_returns_empty_model(spark):
         [(1, ""), (2, None)], "doc_id long, text string"
     )
     assert train_unigram(blank, **PARAMS) == []
+
+
+def test_tokenizer_eval_oracle_null_lang(spark, tmp_path, monkeypatch):
+    """The committed-oracle generator (gen_tokenizer_eval) keeps a NULL
+    lang as its own group, like the engine's groupBy: its VALUES SQL run
+    in DuckDB equals tokenizer_eval on the same documents."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import tools.gen_value_oracles as gvo
+    from pulsarfeatureextractor_spark.functions.unigram import tokenizer_eval
+
+    langs = ["en", None, "en", "fr"]
+    pq.write_table(pa.table({"doc_id": list(range(len(TEXTS))), "text": TEXTS,
+                             "lang": langs}),
+                   str(tmp_path / "documents.parquet"))
+    monkeypatch.setattr(gvo, "SF_DIR", str(tmp_path))
+    ids, texts = gvo.load_docs()
+    want = duckdb.sql(gvo.gen_tokenizer_eval(ids, texts)).fetchall()
+
+    d = spark.read.parquet(str(tmp_path / "documents.parquet"))
+    model = train_unigram(d, vocab_size=64, max_piece_len=4,
+                          seed_max_pieces=256, em_iters=2, prune_frac=0.25)
+    got = [tuple(r) for r in tokenizer_eval(d, model).collect()]
+
+    def key(r):
+        return (r[0] is None, r[0] or "")
+
+    assert sorted(got, key=key) == sorted(want, key=key)
+    assert [r[0] for r in sorted(want, key=key)] == ["en", "fr", None]

@@ -62,7 +62,9 @@ def spark_round6(x: float) -> float:
     return 0.0 if f == 0.0 else f
 
 
-def _sql_str(s: str) -> str:
+def _sql_str(s: "str | None") -> str:
+    if s is None:
+        return "NULL"
     return "'" + s.replace("'", "''") + "'"
 
 
@@ -934,7 +936,8 @@ def gen_tokenizer_eval(ids, texts) -> str:
         g[3] += sum(1 for p in toks if p not in vocab)
         g[4] += sum(len(p) for p in toks)
     rows = []
-    for lang in sorted(agg):
+    # a NULL lang is its own group, as in the engine's groupBy; last
+    for lang in sorted(agg, key=lambda g: (g is None, g or "")):
         nd, nw, nt, nu, nc = agg[lang]
         fert = repr(spark_round6(nt / nw)) if nw else "NULL"
         cpt = repr(spark_round6(nc / nt)) if nt else "NULL"

@@ -1631,7 +1631,7 @@ def pipeline_pointintime_features(spark, sf):
 #
 # These queries close the last §2B rows that round 1 could only
 # pytest-verify (S1, S3/S4, O2, V1, X1-X4): each runs the actual
-# machinery (manifest commit, resumable sink, range exchange, scalar
+# machinery (manifest commit, restartable sink, range exchange, scalar
 # pandas UDF, Structured Streaming into a memory sink) INSIDE the
 # callable and returns a DataFrame a plain DuckDB batch oracle can
 # differentially verify.
@@ -1658,12 +1658,12 @@ def snapshot_scan_docs(spark, sf):
 
 
 def partitioned_sink_resume_docs(spark, sf):
-    """S3+S4 driver gate: resumable partitioned sink end-to-end.  Run 1
+    """S3+S4 driver gate: the restartable partitioned sink end-to-end.  Run 1
     is killed after one 3-partition batch (simulated mid-run kill);
-    run 2 resumes from the checkpoint manifest and re-emits ONLY the
-    missing partitions (lineage sidecars land per partition).  Reading
-    the sink back must equal the full input — DuckDB differential.
-    SURVEY.md §2B S3/S4."""
+    run 2 resumes from the head manifest of the output's own snapshot
+    table (``<out>/_table``, lineage in each snapshot's metrics) and
+    re-emits ONLY the missing partitions.  Reading the sink back must
+    equal the full input — DuckDB differential.  SURVEY.md §2B S3/S4."""
     import tempfile
 
     from pulsarfeatureextractor_spark.sinks.partitioned import run_partitioned_job

@@ -12,8 +12,9 @@ the `pipeline_curation_docs` driver query:
 Pipeline: scan -> length + repetition quality filters -> near-dup
 pairs (MinHash-LSH at scale, exact n-gram Jaccard for small corpora)
 -> connected-component group resolution -> canonical-keep ->
-deterministic hash split -> resumable partitioned write (partitioned
-by split) carrying lineage + per-stage survivor counts as metrics.
+deterministic hash split -> partitioned write (partitioned by split)
+that resumes from its own output manifest and carries lineage +
+per-stage survivor counts as snapshot metrics.
 
 Everything is master-agnostic; resumability and lineage come from the
 same partitioned sink the feature job uses.
@@ -629,7 +630,6 @@ def main(argv=None) -> dict:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True, help="documents parquet path")
     ap.add_argument("--output", required=True)
-    ap.add_argument("--checkpoint", default=None)
     ap.add_argument("--id-col", default="doc_id")
     ap.add_argument("--text-col", default="text")
     ap.add_argument("--min-tokens", type=int, default=20)
@@ -796,7 +796,6 @@ def main(argv=None) -> dict:
             df,
             args.output,
             ["split"],
-            checkpoint_path=args.checkpoint,
             lineage=lineage,
         )
         print(json.dumps({

@@ -5,20 +5,23 @@ The engine's deployment surface (BASELINE.json north_star):
 
     spark-submit --py-files engine.zip jobs/extract_features.py \
         --input /path/to/sequences_table --snapshot 3 \
-        --output /path/to/features_out --checkpoint out/_ckpt.json \
+        --output /path/to/features_out \
         --asof 2024-01-20T00:00:00 --gap-seconds 1800 --scores
 
 Pipeline (SURVEY.md §3.2): snapshot scan (with manifest file pruning)
 -> time filter -> derive event_time -> Lyon moments (+ optional
 Thornton scores) -> as-of join of prior feature observations ->
-lag/session features -> resumable partitioned write carrying lineage
-(snapshot id, partition spec, input manifest) + metrics.
+lag/session features -> partitioned write committed as snapshots of the
+output's own manifest table, carrying lineage (snapshot id, partition
+spec, input manifest) + metrics.
 
 Run it on a cluster by dropping --master local overrides; everything
-below is master-agnostic.  Resumability: re-running after a kill
-re-emits only partitions missing from the checkpoint manifest.  A
-rerun whose lineage (snapshot, as-of, feature set, gap) differs from
-the checkpoint's is refused: it needs a new --output.
+below is master-agnostic.  The output is itself an IcebergLikeTable
+(manifests under <output>/_table, one snapshot per committed batch,
+lineage in each snapshot's metrics).  Resumability: re-running after a
+kill re-emits only partitions missing from that table's head manifest.
+A rerun whose lineage (snapshot, as-of, feature set, gap) differs from
+the head snapshot's is refused: it needs a new --output.
 """
 
 from __future__ import annotations
@@ -87,7 +90,6 @@ def main(argv=None) -> dict:
     ap.add_argument("--input", required=True, help="IcebergLikeTable dir")
     ap.add_argument("--snapshot", type=int, default=None)
     ap.add_argument("--output", required=True)
-    ap.add_argument("--checkpoint", default=None)
     ap.add_argument("--asof", default=None, help="ISO timestamp upper bound")
     ap.add_argument("--gap-seconds", type=float, default=1800.0)
     ap.add_argument("--scores", action="store_true",
@@ -115,7 +117,6 @@ def main(argv=None) -> dict:
             df,
             args.output,
             args.partition_cols.split(","),
-            checkpoint_path=args.checkpoint,
             lineage=lineage,
             batch_size=args.batch_size,
         )

@@ -1,13 +1,8 @@
-"""Sinks: Iceberg-like snapshot manifests, lineage-carrying partitioned
-writes, and driver-side checkpoint/resume (SURVEY.md §2B S1/S3/S4)."""
+"""Sinks: Iceberg-like snapshot manifests and the partitioned write
+whose output is one such table, resumed from its head manifest
+(SURVEY.md §2B S1/S3/S4)."""
 
-from pulsarfeatureextractor_spark.sinks.manifest import (  # noqa: F401
-    IcebergLikeTable,
-    read_snapshot,
-    write_snapshot,
-)
+from pulsarfeatureextractor_spark.sinks.manifest import IcebergLikeTable  # noqa: F401
 from pulsarfeatureextractor_spark.sinks.partitioned import (  # noqa: F401
-    load_checkpoint,
-    resume_plan,
     run_partitioned_job,
 )

@@ -15,11 +15,14 @@ switches to a real Iceberg catalog, so moving to ``iceberg-spark-runtime``
 means changing the call sites to ``spark.read.format("iceberg")``.
 
 Commit protocol (crash safety without table-format transactions):
-data files are written into an immutable ``data/snap-<uuid>/``
-directory FIRST; the manifest JSON naming that directory is written
-with write-temp + atomic ``os.replace`` LAST.  A crash between the two
-leaves an orphan data dir that no manifest references — invisible to
-every reader, exactly Iceberg's orphan-file semantics.
+data files are written FIRST (``write``/``merge_upsert`` into an
+immutable ``data/snap-<uuid>/`` directory; the partitioned sink into
+its output's hive layout); :meth:`IcebergLikeTable.commit` then
+publishes the manifest naming them LAST, create-if-absent.  A crash
+between the two leaves orphan files that no manifest references —
+invisible to every reader, exactly Iceberg's orphan-file semantics.
+Two writers racing for one snapshot id cannot both win it: an append
+re-bases on the new head, any other operation raises.
 """
 
 from __future__ import annotations
@@ -49,16 +52,16 @@ def _uri_local_path(p: str) -> str:
     return p
 
 
-def _fsync_write_json(path: str, obj: dict) -> None:
-    tmp = f"{path}.tmp.{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump(obj, f, indent=1, default=str)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, path)  # atomic commit
+class CommitConflictError(RuntimeError):
+    """Another writer committed after the head this commit was planned on."""
 
 
-def _file_stats(spark: SparkSession, files: list[str]) -> list[dict]:
+# Spark's hive-style writer renders a NULL (or empty string) partition
+# value as this directory name.
+NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _file_stats(files: list[str]) -> list[dict]:
     """Per-file row counts + min/max column stats from parquet footers.
 
     Footer-only reads (pyarrow metadata) — never a data scan; this is
@@ -99,19 +102,28 @@ def _file_stats(spark: SparkSession, files: list[str]) -> list[dict]:
 
 
 def _partition_values(base: str, path: str) -> dict:
-    """Hive-style k=v partition values encoded in the file's dir path."""
+    """Hive-style k=v partition values encoded in the file's dir path,
+    unescaped to the values a read returns: Spark escapes characters
+    such as '/', ':' and '%' in directory names, and writes NULL as
+    ``NULL_PARTITION`` (recorded as None)."""
+    from urllib.parse import unquote
+
     rel = os.path.relpath(os.path.dirname(path), base)
-    vals = {}
+    vals: dict = {}
     for seg in rel.split(os.sep):
         if "=" in seg:
             k, _, v = seg.partition("=")
-            vals[k] = v
+            vals[unquote(k)] = None if v == NULL_PARTITION else unquote(v)
     return vals
 
 
 def _list_parquet(root: str) -> list[str]:
+    """Parquet files under ``root``, skipping the ``_``/``.`` dirs
+    Spark's readers skip too (``_temporary``, ``.spark-staging-*``, a
+    sink's ``_table``)."""
     found = []
-    for dirpath, _dirs, names in os.walk(root):
+    for dirpath, dirs, names in os.walk(root):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
         for n in names:
             if n.endswith(".parquet"):
                 found.append(os.path.join(dirpath, n))
@@ -162,40 +174,82 @@ class IcebergLikeTable:
         files stay on disk for time travel of old snapshot ids).
         """
         ids = self.snapshot_ids()
-        sid = (ids[-1] + 1) if ids else 1
         data_dir = os.path.join(self.path, DATA_DIR, f"snap-{uuid.uuid4().hex}")
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(data_dir)
-
-        spark = df.sparkSession
-        new_files = _file_stats(spark, _list_parquet(data_dir))
-        for f in new_files:
-            # base dir lets the reader rebuild hive-partition columns
-            # (partitionBy encodes them in dir names, not data pages);
-            # partition values are ALSO recorded per file, Iceberg-style
-            f["base"] = data_dir
-            f["partition"] = _partition_values(data_dir, f["path"])
-        files = new_files
-        if mode == "append" and ids:
-            files = self.manifest(ids[-1])["files"] + new_files
-        manifest = {
-            "snapshot_id": sid,
-            "parent_snapshot_id": ids[-1] if ids else None,
-            "committed_at": time.time(),
-            "operation": operation or mode,
-            "partition_spec": partition_by or [],
-            "schema": df.schema.jsonValue(),
-            "files": files,
-            "total_rows": sum(f["rows"] for f in files),
-            "metrics": metrics or {},
-        }
-        os.makedirs(self.manifest_dir, exist_ok=True)
-        _fsync_write_json(
-            os.path.join(self.manifest_dir, f"snap-{sid}.json"), manifest
+        return self.commit(
+            _list_parquet(data_dir), data_dir, operation or mode,
+            partition_by or [], df.schema.jsonValue(), metrics,
+            parent=ids[-1] if ids else None,
         )
-        return manifest
+
+    def commit(
+        self,
+        added_paths: "list[str]",
+        base: str,
+        operation: str,
+        partition_spec: "list[str]",
+        schema: dict,
+        metrics: "dict | None" = None,
+        carried: "list[dict] | None" = None,
+        parent: "int | None" = None,
+    ) -> dict:
+        """Publish one snapshot of ``carried`` + the files at
+        ``added_paths`` (footer stats, hive partition values relative to
+        ``base``); returns its manifest.  The only manifest writer.
+
+        An ``append`` carries the head's files as of publishing; any
+        other operation carries ``carried``, read from snapshot
+        ``parent``, and raises :class:`CommitConflictError` once the
+        head has moved.  Publishing hard-links an fsynced temp file
+        (kept out of ``snapshots/``, removed either way) to
+        ``snap-<id>.json``; the link fails if the id exists, so a
+        losing append re-reads the head and retries.
+        """
+        added = _file_stats(added_paths)
+        for f in added:
+            # lets a read rebuild the hive partition columns
+            f["base"] = base
+            f["partition"] = _partition_values(base, f["path"])
+        os.makedirs(self.manifest_dir, exist_ok=True)
+        tmp = os.path.join(self.path, f".commit-{uuid.uuid4().hex}.tmp")
+        try:
+            while True:
+                ids = self.snapshot_ids()
+                head = ids[-1] if ids else None
+                if operation == "append":
+                    carried = self.manifest(head)["files"] if ids else []
+                elif head != parent:
+                    raise CommitConflictError(
+                        f"{operation} of {self.path} was planned on snapshot "
+                        f"{parent}, but snapshot {head} has been committed since")
+                files = (carried or []) + added
+                manifest = {
+                    "snapshot_id": (head or 0) + 1,
+                    "parent_snapshot_id": head,
+                    "committed_at": time.time(),
+                    "operation": operation,
+                    "partition_spec": list(partition_spec),
+                    "schema": schema,
+                    "files": files,
+                    "total_rows": sum(f["rows"] for f in files),
+                    "metrics": metrics or {},
+                }
+                with open(tmp, "w") as out:
+                    json.dump(manifest, out, indent=1, default=str)
+                    out.flush()
+                    os.fsync(out.fileno())
+                try:
+                    os.link(tmp, os.path.join(
+                        self.manifest_dir, f"snap-{manifest['snapshot_id']}.json"))
+                    return manifest
+                except FileExistsError:
+                    continue  # lost the id: re-read the head
+        finally:
+            if os.path.exists(tmp):
+                os.remove(tmp)
 
     def _scan_files(
         self,
@@ -310,33 +364,15 @@ class IcebergLikeTable:
         )
         new_data = survivors.unionByName(updates, allowMissingColumns=True)
 
-        sid = ids[-1] + 1
         data_dir = os.path.join(self.path, DATA_DIR, f"snap-{uuid.uuid4().hex}")
         new_data.write.mode("overwrite").parquet(data_dir)
-        new_files = _file_stats(spark, _list_parquet(data_dir))
-        for f in new_files:
-            f["base"] = data_dir
-            f["partition"] = _partition_values(data_dir, f["path"])
-        manifest = {
-            "snapshot_id": sid,
-            "parent_snapshot_id": ids[-1],
-            "committed_at": time.time(),
-            "operation": "merge",
-            "partition_spec": man.get("partition_spec", []),
-            "schema": new_data.schema.jsonValue(),
-            "files": untouched_prev + new_files,
-            "total_rows": sum(f["rows"] for f in untouched_prev + new_files),
-            "metrics": {
-                **(metrics or {}),
-                "files_rewritten": len(touched),
-                "files_carried": len(untouched_prev),
-            },
-        }
-        os.makedirs(self.manifest_dir, exist_ok=True)
-        _fsync_write_json(
-            os.path.join(self.manifest_dir, f"snap-{sid}.json"), manifest
+        return self.commit(
+            _list_parquet(data_dir), data_dir, "merge",
+            man.get("partition_spec", []), new_data.schema.jsonValue(),
+            {**(metrics or {}), "files_rewritten": len(touched),
+             "files_carried": len(untouched_prev)},
+            carried=untouched_prev, parent=man["snapshot_id"],
         )
-        return manifest
 
     def read(
         self,
@@ -474,12 +510,3 @@ class IcebergLikeTable:
                 continue  # provably disjoint
             keep.append(f["path"])
         return keep
-
-
-def write_snapshot(df: DataFrame, path: str, partition_by=None, mode="append",
-                   metrics=None) -> dict:
-    return IcebergLikeTable(path).write(df, partition_by, mode, metrics)
-
-
-def read_snapshot(spark: SparkSession, path: str, snapshot_id=None) -> DataFrame:
-    return IcebergLikeTable(path).read(spark, snapshot_id)

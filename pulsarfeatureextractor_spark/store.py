@@ -11,7 +11,7 @@ appends to the lazy logical plan; nothing executes until an action
        .asof_join(snaps, on="event_time", right_on="obs_time",
                   by="doc_id", value_cols=["f_mean"])
        .sessionize(gap_seconds=1800)
-       .write("/out", partition_cols=["source"], resumable=True))
+       .write("/out", partition_cols=["source"]))
 """
 
 from __future__ import annotations
@@ -79,17 +79,11 @@ class FeatureFrame:
 
     # -- actions -------------------------------------------------------
     def write(self, out_dir: str, partition_cols: Iterable[str] = ("source",),
-              resumable: bool = True, checkpoint_path: "str | None" = None,
               batch_size: int = 0) -> dict:
         from pulsarfeatureextractor_spark.sinks.partitioned import run_partitioned_job
 
-        if not resumable:
-            (self.df.write.mode("overwrite")
-             .partitionBy(*partition_cols).parquet(out_dir))
-            return {"written": ["*"], "skipped": []}
         return run_partitioned_job(
-            self.df, out_dir, list(partition_cols),
-            checkpoint_path=checkpoint_path, lineage=self.lineage,
+            self.df, out_dir, list(partition_cols), lineage=self.lineage,
             batch_size=batch_size,
         )
 

@@ -1,16 +1,21 @@
 """End-to-end job CLI: snapshot in -> resumable lineage-carrying features out."""
 
-import json
 import os
 import subprocess
 import sys
 
 import pytest
 
+from pulsarfeatureextractor_spark.sinks.manifest import IcebergLikeTable
+
+
+def _lineage(out):
+    """Lineage + metrics of the head snapshot of a job's output table."""
+    return IcebergLikeTable(os.path.join(out, "_table")).manifest()["metrics"]
+
 
 @pytest.fixture(scope="module")
 def table_dir(spark, tmp_path_factory):
-    from pulsarfeatureextractor_spark.sinks.manifest import IcebergLikeTable
     from pulsarfeatureextractor_spark.sources.tokenized import synthetic_sequences
 
     d = str(tmp_path_factory.mktemp("job") / "table")
@@ -39,12 +44,11 @@ def test_job_end_to_end(spark, table_dir, tmp_path):
     # leakage guard: nothing after the as-of instant
     from pyspark.sql import functions as F
     assert feat.where(F.col("event_time") > "2024-01-20T00:00:00").count() == 0
-    # lineage sidecar present and names the input snapshot
-    srcs = [p for p in os.listdir(out) if p.startswith("source=")]
-    side = json.load(open(os.path.join(out, srcs[0], "_lineage.json")))
+    # the output table's manifest names the input snapshot
+    side = _lineage(out)
     assert side["snapshot_id"] == 1 and side["input_manifest"]
 
-    # rerun: everything skipped (checkpoint complete)
+    # rerun: everything skipped (the output manifest is complete)
     res2 = extract_features.main([
         "--input", table_dir, "--output", out,
         "--asof", "2024-01-20T00:00:00", "--scores",
@@ -61,7 +65,6 @@ def test_job_refuses_stale_resume(spark, tmp_path, monkeypatch):
     import functools
 
     from pulsarfeatureextractor_spark.sinks import partitioned
-    from pulsarfeatureextractor_spark.sinks.manifest import IcebergLikeTable
     from pulsarfeatureextractor_spark.sources.tokenized import synthetic_sequences
 
     sys.path.insert(0, os.path.join(
@@ -134,8 +137,7 @@ def test_curate_job_end_to_end(spark, tmp_path):
     splits = {r["split"] for r in cur.select("split").distinct().collect()}
     assert splits <= {"train", "val", "test"}
     # lineage sidecar carries the per-stage survivor metrics
-    parts = [p for p in os.listdir(out) if p.startswith("split=")]
-    side = json.load(open(os.path.join(out, parts[0], "_lineage.json")))
+    side = _lineage(out)
     m = side["metrics"]
     assert m["docs_in"] >= m["docs_after_quality"] >= m["docs_canonical"] > 0
     assert m["dropped_dup"] > 0  # the fixtures plant near-dups
@@ -178,8 +180,7 @@ def test_curate_job_model_filter_stage(spark, tmp_path):
     expect_pass = scored.where(F.col("model_score") >= threshold)
     n_len, n_pass = lengthy.count(), expect_pass.count()
     assert 0 < n_pass < n_len  # the gate actually splits the corpus
-    parts = [p for p in os.listdir(out) if p.startswith("split=")]
-    side = json.load(open(os.path.join(out, parts[0], "_lineage.json")))
+    side = _lineage(out)
     m = side["metrics"]
     assert m["dropped_model"] == n_len - n_pass
     assert m["docs_after_quality"] == n_pass
@@ -207,8 +208,7 @@ def test_curate_job_expectations_gate(spark, tmp_path):
         "--expectations", "not_null:text;unique:doc_id",
     ])
     assert len(res["written"]) > 0
-    parts = [p for p in os.listdir(out_ok) if p.startswith("split=")]
-    side = json.load(open(os.path.join(out_ok, parts[0], "_lineage.json")))
+    side = _lineage(out_ok)
     assert side["contract"]["passed"] is True
     assert side["contract"]["metrics"]["text_null_count"] == 0
 
@@ -228,8 +228,7 @@ def test_curate_job_expectations_gate(spark, tmp_path):
         "--expectations-action", "warn",
     ])
     assert len(res["written"]) > 0
-    parts = [p for p in os.listdir(out_warn) if p.startswith("split=")]
-    side = json.load(open(os.path.join(out_warn, parts[0], "_lineage.json")))
+    side = _lineage(out_warn)
     assert side["contract"]["passed"] is False
     assert any("in_range" in f for f in side["contract"]["failures"])
 
@@ -272,8 +271,7 @@ def test_curate_job_mix_stage(spark, tmp_path):
     for r in per_doc:
         assert sorted(r["ixs"]) == list(range(r["n"]))
         assert r["nsplit"] == 1
-    parts = [p for p in os.listdir(out) if p.startswith("split=")]
-    side = json.load(open(os.path.join(out, parts[0], "_lineage.json")))
+    side = _lineage(out)
     mix = side["mix"]
     assert set(mix["achieved_tokens"]) <= {"src0", "src1"}
     assert mix["target_tokens"]["src0"] == 22500.0
@@ -339,8 +337,7 @@ def test_curate_job_perplexity_filter_stage(spark, tmp_path):
         "--min-tokens", "20", "--max-ppl", str(thr),
     ])
     assert len(res["written"]) > 0
-    parts = [p for p in os.listdir(out) if p.startswith("split=")]
-    side = json.load(open(os.path.join(out, parts[0], "_lineage.json")))
+    side = _lineage(out)
     m = side["metrics"]
     assert m["dropped_perplexity"] == n_len - n_pass
     assert m["docs_after_quality"] == n_pass
@@ -393,8 +390,7 @@ def test_curate_job_mix_temperature_stage(spark, tmp_path):
         "--mix-temperature", "0.3", "--mix-budget", "30000",
     ])
     assert len(res["written"]) > 0
-    parts = [p for p in os.listdir(out) if p.startswith("split=")]
-    side = json.load(open(os.path.join(out, parts[0], "_lineage.json")))
+    side = _lineage(out)
     mix = side["mix"]
     assert mix["temperature"] == 0.3
     # derived weights: normalized, one per surviving source
@@ -428,10 +424,7 @@ def test_curate_job_model_percentile_gate(spark, tmp_path):
         "--model-percentile", "0.5",
     ])
     assert len(res["written"]) > 0
-    parts = [p for p in os.listdir(out) if p.startswith("split=")]
-    m = json.load(open(os.path.join(out, parts[0], "_lineage.json")))[
-        "metrics"
-    ]
+    m = _lineage(out)["metrics"]
     n_len = (
         spark.read.parquet(src)
         .where(F.size(words_col("text")) >= 20)
@@ -510,8 +503,7 @@ def test_curate_job_line_dedup_and_blocklist(spark, tmp_path):
     # the three blocklisted docs were dropped
     ids = {r["doc_id"] for r in cur.select("doc_id").collect()}
     assert ids.isdisjoint({1, 3, 5})
-    parts = [p for p in os.listdir(out) if p.startswith("split=")]
-    side = json.load(open(os.path.join(out, parts[0], "_lineage.json")))
+    side = _lineage(out)
     m = side["metrics"]
     assert m["dropped_quality"] >= 3  # blocklist drops land here
     assert (
@@ -543,8 +535,7 @@ def test_curate_job_round5_stages(spark, tmp_path):
     assert len(res["written"]) > 0
     cur = spark.read.parquet(out)
     assert cur.select("doc_id").distinct().count() == cur.count()
-    parts = [p for p in os.listdir(out) if p.startswith("split=")]
-    side = json.load(open(os.path.join(out, parts[0], "_lineage.json")))
+    side = _lineage(out)
     m = side["metrics"]
     # every stage fired and the ledger adds up
     assert m["dropped_quality"] > 0          # gopher folded in here
@@ -595,10 +586,7 @@ def test_curate_job_nb_langid_and_percentile_by(spark, tmp_path):
         "--model-percentile-by", "source",
     ])
     assert len(res["written"]) > 0
-    parts = [p for p in os.listdir(out) if p.startswith("split=")]
-    m = json.load(open(os.path.join(out, parts[0], "_lineage.json")))[
-        "metrics"
-    ]
+    m = _lineage(out)["metrics"]
     # the planted corpus is majority-en; the learned gate must both
     # keep a nontrivial en core and cut a nontrivial non-en share
     assert m["dropped_langid"] > 0
@@ -621,14 +609,7 @@ def test_curate_job_nb_langid_and_percentile_by(spark, tmp_path):
         "--model-percentile", "0.5",
         "--model-percentile-by", "source",
     ])
-    parts2 = [
-        p for p in os.listdir(str(tmp_path / "cur_nb2"))
-        if p.startswith("split=")
-    ]
-    m2 = json.load(
-        open(os.path.join(str(tmp_path / "cur_nb2"), parts2[0],
-                          "_lineage.json"))
-    )["metrics"]
+    m2 = _lineage(str(tmp_path / "cur_nb2"))["metrics"]
     assert m == m2
 
 
@@ -670,10 +651,7 @@ def test_curate_job_dedup_against_stage(spark, tmp_path):
         "--dedup-against", ref_path,
     ])
     assert len(res["written"]) > 0
-    parts = [p for p in os.listdir(out) if p.startswith("split=")]
-    m = json.load(open(os.path.join(out, parts[0], "_lineage.json")))[
-        "metrics"
-    ]
+    m = _lineage(out)["metrics"]
     # every doc_id < 250 is digested in the reference -> all dropped
     assert m["dropped_ingested"] >= 250
     assert (
@@ -711,10 +689,7 @@ def test_curate_job_fuzzy_dedup_stage(spark, tmp_path):
         "--fuzzy-dedup-threshold", "0.5",
     ])
     assert len(res["written"]) > 0
-    parts = [p for p in os.listdir(out) if p.startswith("split=")]
-    m = json.load(open(os.path.join(out, parts[0], "_lineage.json")))[
-        "metrics"
-    ]
+    m = _lineage(out)["metrics"]
     # every doc_id % 3 == 0 is its own exact member of the index ->
     # at least those drop (est 1.0), plus genuine near-dups
     assert m["dropped_ingested_fuzzy"] >= 150

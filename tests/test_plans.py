@@ -9,6 +9,8 @@ timings — the properties that decide 100 TB behavior:
 - the Arrow feature path contains no row-at-a-time Python and no shuffle.
 """
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -85,22 +87,6 @@ def test_lyon_arrow_path_no_shuffle_no_rowpython(spark):
     assert "Exchange" not in plan           # pure map: scan partitioning kept
     assert "BatchEvalPython" not in plan    # row-at-a-time Python banned
     assert "MapInArrow" in plan or "PythonMapInArrow" in plan or "ArrowEval" in plan
-
-
-def test_semi_join_for_resume_plan(spark):
-    from pulsarfeatureextractor_spark.sinks.partitioned import resume_plan
-
-    planned = spark.range(20).selectExpr("concat('src', id) as source")
-    import json
-    import tempfile
-
-    ck = tempfile.mktemp()
-    with open(ck, "w") as f:
-        json.dump({"done": {"src1": {}, "src2": {}}}, f)
-    out = resume_plan(planned, ck, ["source"])
-    plan = _plan(out)
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
-    assert out.count() == 18
 
 
 def test_salted_join_no_skew_partition(spark):
@@ -267,3 +253,23 @@ def test_feature_job_lineage_evaluated_once(spark, tmp_path, feature_set):
     assert plan.count("Exchange") == 1, plan
     # token arrays are dropped AT the Python boundary
     assert "tokens" not in plan.split("MapInArrow")[0], plan
+
+
+def test_dump_plans_rewrites_only_generated_region():
+    """tools/dump_plans.py replaces the marked region of PLANS.md and
+    keeps the hand-written text around it; without markers it refuses."""
+    import importlib.util
+
+    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                        "tools", "dump_plans.py")
+    spec = importlib.util.spec_from_file_location("dump_plans", path)
+    tool = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(tool)
+    doc = f"# head\n{tool.BEGIN}\n## old plan\n{tool.END}\n## hand-written\nkept\n"
+    new = tool.replace_generated(doc, "## new plan\n")
+    assert new == f"# head\n{tool.BEGIN}\n\n## new plan\n\n{tool.END}\n## hand-written\nkept\n"
+    assert tool.replace_generated(new, "## new plan") == new
+    with pytest.raises(ValueError, match="markers"):
+        tool.replace_generated("# no markers\n## hand-written\n", "## x")
+    with open(tool.PLANS) as f:
+        assert f.read().count(tool.BEGIN) == 1

@@ -216,10 +216,9 @@ def test_curate_job_trained_quality_gate(spark, tmp_path):
     # dedup/split stages only ever REMOVE docs — survivors must be a
     # subset of the model-pass set, and no clear-fail doc may survive
     assert not (out_ids & must_fail)
-    side_parts = [p for p in os.listdir(out) if p.startswith("split=")]
-    import json
+    from pulsarfeatureextractor_spark.sinks.manifest import IcebergLikeTable
 
-    m = json.load(open(os.path.join(out, side_parts[0], "_lineage.json")))[
+    m = IcebergLikeTable(os.path.join(out, "_table")).manifest()["metrics"][
         "metrics"
     ]
     assert m["dropped_model"] >= len(must_fail)

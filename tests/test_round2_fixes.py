@@ -124,8 +124,9 @@ def test_grouped_moments_exact_beyond_int64(spark):
 # ---------------------------------------------------------------- sink
 
 def test_partitioned_sink_null_and_bool_keys(spark, tmp_path):
+    from pulsarfeatureextractor_spark.sinks.manifest import IcebergLikeTable
     from pulsarfeatureextractor_spark.sinks.partitioned import (
-        load_checkpoint,
+        _manifest_key,
         run_partitioned_job,
     )
 
@@ -138,19 +139,18 @@ def test_partitioned_sink_null_and_bool_keys(spark, tmp_path):
     ]
     df = spark.createDataFrame(rows)
     out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt.json")
-    res = run_partitioned_job(df, out, ["part", "flag"], checkpoint_path=ckpt,
-                              batch_size=2)
+    res = run_partitioned_job(df, out, ["part", "flag"], batch_size=2)
     assert len(res["written"]) == 5
     back = spark.read.parquet(out)
     # NULL and boolean partition values must all round-trip (the round-1
     # key path silently dropped NULL partitions while marking them done)
     assert sorted(r["v"] for r in back.collect()) == [1, 2, 3, 4, 5]
-    done = set(load_checkpoint(ckpt)["done"])
+    done = {_manifest_key(f["partition"], ["part", "flag"]) for f in
+            IcebergLikeTable(os.path.join(out, "_table")).manifest()["files"]}
     assert "__HIVE_DEFAULT_PARTITION__/true" in done
     assert "b/__HIVE_DEFAULT_PARTITION__" in done
     # resume: nothing left to write, nothing lost
-    res2 = run_partitioned_job(df, out, ["part", "flag"], checkpoint_path=ckpt)
+    res2 = run_partitioned_job(df, out, ["part", "flag"])
     assert res2["written"] == [] and len(res2["skipped"]) == 5
     assert sorted(r["v"] for r in spark.read.parquet(out).collect()) == [1, 2, 3, 4, 5]
 
@@ -161,11 +161,10 @@ def test_partitioned_sink_null_key_survives_kill(spark, tmp_path):
     rows = [Row(part=None, v=1), Row(part="a", v=2), Row(part="b", v=3)]
     df = spark.createDataFrame(rows)
     out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt.json")
     with pytest.raises(RuntimeError):
-        run_partitioned_job(df, out, ["part"], checkpoint_path=ckpt,
-                            batch_size=1, fail_after_batches=1)
-    res = run_partitioned_job(df, out, ["part"], checkpoint_path=ckpt, batch_size=1)
+        run_partitioned_job(df, out, ["part"], batch_size=1,
+                            fail_after_batches=1)
+    res = run_partitioned_job(df, out, ["part"], batch_size=1)
     assert len(res["skipped"]) == 1
     assert sorted(r["v"] for r in spark.read.parquet(out).collect()) == [1, 2, 3]
 

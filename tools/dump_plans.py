@@ -5,6 +5,11 @@ The claims in README/SURVEY (pushdown reaches the scan, dims broadcast,
 as-of is single-shuffle, the Arrow feature path has no exchange and no
 row-Python) are pinned by tests/test_plans.py; this artifact lets a
 reviewer read the actual plans without running anything.
+
+Only the region between the BEGIN/END markers in PLANS.md is rewritten;
+the hand-written sections around it are kept.  Run from anywhere:
+
+    python tools/dump_plans.py
 """
 
 from __future__ import annotations
@@ -15,6 +20,21 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF = "/root/testdata/sf0.001"
+PLANS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                     "PLANS.md")
+BEGIN = "<!-- BEGIN GENERATED by tools/dump_plans.py -->"
+END = "<!-- END GENERATED -->"
+
+
+def replace_generated(doc: str, generated: str) -> str:
+    """``doc`` with the text between its BEGIN and END markers replaced
+    by ``generated``; refuses a document without both markers rather
+    than overwrite hand-written sections."""
+    head, sep, rest = doc.partition(BEGIN)
+    _old, sep2, tail = rest.partition(END)
+    if not (sep and sep2):
+        raise ValueError(f"PLANS.md lacks the {BEGIN!r} ... {END!r} markers")
+    return f"{head}{BEGIN}\n\n{generated.strip()}\n\n{END}{tail}"
 
 
 def main() -> None:
@@ -331,19 +351,16 @@ def main() -> None:
         ),
     ))
 
-    out = ["# PLANS — `explain(\"formatted\")` for the load-bearing plans",
-           "",
-           "Regenerate with `python tools/dump_plans.py`. Plan-shape",
-           "invariants are enforced by `tests/test_plans.py`; this file is",
-           "for human review.", ""]
+    out = []
     for title, caption, df in sections:
         text = df if isinstance(df, str) else fmt(df)
         out += [f"## {title}", "", caption, "", "```", text.rstrip(), "```", ""]
 
-    with open(os.path.join(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__))), "PLANS.md"), "w") as f:
-        f.write("\n".join(out))
-    print("wrote PLANS.md")
+    with open(PLANS) as f:
+        doc = replace_generated(f.read(), "\n".join(out))
+    with open(PLANS, "w") as f:
+        f.write(doc)
+    print("wrote the generated region of PLANS.md")
     spark.stop()
 
 

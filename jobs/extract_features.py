@@ -46,7 +46,8 @@ def build_pipeline(spark, args):
 
     table = IcebergLikeTable(args.input)
     manifest = table.manifest(args.snapshot)
-    seqs = table.read(spark, args.snapshot)
+    # the snapshot the lineage names, even if a commit lands meanwhile
+    seqs = table.read(spark, manifest["snapshot_id"])
     seqs = with_event_time(seqs)
     if args.asof:
         # leakage guard at the scan: nothing after the as-of instant is

@@ -10,6 +10,12 @@ the *surface the north rule needs* on plain parquet + JSON sidecars:
 - **time travel**: read the table as of any snapshot id (reads exactly
   the files that snapshot's manifest lists — late files are invisible).
 
+The manifest plans the scan: a read takes its file list and its schema
+from the manifest, so building the read DataFrame starts no Spark
+listing or schema-inference job whenever Spark's driver-side index of
+a snapshot's data directory holds exactly the manifest's files for it
+(see :meth:`IcebergLikeTable._scan_files`).
+
 The semantics mirror Iceberg's snapshot/manifest model; nothing here
 switches to a real Iceberg catalog, so moving to ``iceberg-spark-runtime``
 means changing the call sites to ``spark.read.format("iceberg")``.
@@ -33,6 +39,7 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,12 +49,13 @@ DATA_DIR = "data"
 
 def _uri_local_path(p: str) -> str:
     """Canonical local path for a file URI or bare path: `file:/x`,
-    `file:///x` and `/x` all map to `/x`.  Non-file schemes (s3a, hdfs)
-    pass through whole so distinct stores never collide."""
+    `file:///x` and `/x` all map to `/x`.  Only a URI is unquoted (a
+    bare path is already a file name, '%' included); non-file schemes
+    (s3a, hdfs) pass through whole so distinct stores never collide."""
     from urllib.parse import unquote, urlparse
 
     u = urlparse(p)
-    if u.scheme in ("", "file"):
+    if u.scheme == "file":
         return unquote(u.path) or p
     return p
 
@@ -65,7 +73,7 @@ def _file_stats(files: list[str]) -> list[dict]:
     """Per-file row counts + min/max column stats from parquet footers.
 
     Footer-only reads (pyarrow metadata) — never a data scan; this is
-    what lets ``read_snapshot`` prune files before Spark ever sees them.
+    what lets ``read(prune=...)`` drop files before Spark ever sees them.
     """
     import pyarrow.parquet as pq
 
@@ -130,12 +138,32 @@ def _list_parquet(root: str) -> list[str]:
     return sorted(found)
 
 
+def _scan_base(reader, base: str, paths: "list[str]") -> DataFrame:
+    """Read ``base`` as one root directory when Spark's index of it
+    holds exactly ``paths``; otherwise read the explicit list."""
+    try:
+        whole = reader.parquet(base)
+    except SparkRuntimeException:
+        # a foreign layout beside the files broke partition discovery
+        return reader.parquet(*paths)
+    listed = {_uri_local_path(p) for p in whole.inputFiles()}
+    if listed == {_uri_local_path(p) for p in paths}:
+        return whole
+    return reader.parquet(*paths)
+
+
 @dataclass
 class IcebergLikeTable:
     """A parquet directory with Iceberg-like snapshot manifests."""
 
     path: str
     spark: SparkSession = field(repr=False, default=None)  # type: ignore[assignment]
+
+    def __post_init__(self) -> None:
+        # Hadoop resolves a relative path and '..' textually when it
+        # writes; the manifest's paths and bases must name the same
+        # files, and match what Spark's file index reports for them.
+        self.path = os.path.abspath(self.path)
 
     @property
     def manifest_dir(self) -> str:
@@ -199,6 +227,8 @@ class IcebergLikeTable:
         """Publish one snapshot of ``carried`` + the files at
         ``added_paths`` (footer stats, hive partition values relative to
         ``base``); returns its manifest.  The only manifest writer.
+        Zero-row added files (an empty task's output) are deleted, not
+        listed: no scan should open them.
 
         An ``append`` carries the head's files as of publishing; any
         other operation carries ``carried``, read from snapshot
@@ -208,11 +238,15 @@ class IcebergLikeTable:
         ``snap-<id>.json``; the link fails if the id exists, so a
         losing append re-reads the head and retries.
         """
-        added = _file_stats(added_paths)
-        for f in added:
+        added = []
+        for f in _file_stats(added_paths):
+            if f["rows"] == 0:
+                os.remove(f["path"])
+                continue
             # lets a read rebuild the hive partition columns
             f["base"] = base
             f["partition"] = _partition_values(base, f["path"])
+            added.append(f)
         os.makedirs(self.manifest_dir, exist_ok=True)
         tmp = os.path.join(self.path, f".commit-{uuid.uuid4().hex}.tmp")
         try:
@@ -258,14 +292,29 @@ class IcebergLikeTable:
         schema_json: dict,
         with_file_col: bool = False,
     ) -> DataFrame:
-        """Union-read a manifest file list, grouped by base dir so Spark
-        re-derives hive partition columns; optionally attach the
-        ``_metadata.file_path`` hidden column (which must be selected
-        directly on each scan — it does not survive a union)."""
+        """Scan exactly the manifest file list ``files``; the manifest
+        plans the scan.
+
+        - The schema is the manifest's ``schema_json``: no footer
+          inference job, and hive partition columns keep their recorded
+          types (a string '001' stays '001').
+        - Files are grouped by base dir, so Spark re-derives the
+          partition columns.  A base is read as ONE root directory,
+          listed on the driver without a Spark job, when Spark's own
+          index of it (same hidden-file and escaping rules as the scan)
+          holds exactly the manifest's files for that base.  Otherwise
+          (a pruned or carried subset; an orphan, an uncommitted file
+          or a foreign layout beside them) it is read as the explicit
+          path list, which Spark lists with a job once it passes its
+          parallel-discovery threshold.
+
+        Optionally attach the ``_metadata.file_path`` hidden column
+        (which must be selected directly on each scan — it does not
+        survive a union)."""
         from pyspark.sql import types as T
 
+        schema = T.StructType.fromJson(schema_json)
         if not files:
-            schema = T.StructType.fromJson(schema_json)
             if with_file_col:
                 schema = T.StructType(
                     list(schema.fields) + [T.StructField("__file", T.StringType())]
@@ -276,10 +325,11 @@ class IcebergLikeTable:
             by_base.setdefault(f.get("base", ""), []).append(f["path"])
         df = None
         for base, paths in sorted(by_base.items()):
-            reader = spark.read
+            reader = spark.read.schema(schema)
             if base:
-                reader = reader.option("basePath", base)
-            part = reader.parquet(*paths)
+                part = _scan_base(reader.option("basePath", base), base, paths)
+            else:
+                part = reader.parquet(*paths)
             if with_file_col:
                 part = part.select(
                     "*", F.col("_metadata.file_path").alias("__file")

@@ -123,6 +123,9 @@ def run_partitioned_job(
     """
     part_cols = list(partition_cols)
     lineage = lineage or {}
+    # absolute and '..'-free like the table path: the committed file
+    # paths must be the ones Spark's writer and file index use
+    out_dir = os.path.abspath(out_dir)
     table = IcebergLikeTable(os.path.join(out_dir, TABLE_DIR))
     done: list[str] = []
     if table.snapshot_ids():

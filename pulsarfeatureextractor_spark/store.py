@@ -105,7 +105,7 @@ class FeatureStore:
             "partition_spec_in": man["partition_spec"],
             "input_manifest": [f["path"] for f in man["files"]],
         }
-        return FeatureFrame(self.spark, t.read(self.spark, snapshot_id), lineage)
+        return FeatureFrame(self.spark, t.read(self.spark, man["snapshot_id"]), lineage)
 
     def read_incremental(
         self,

@@ -97,6 +97,36 @@ def test_job_refuses_stale_resume(spark, tmp_path, monkeypatch):
     assert extract_features.main([*args, "--snapshot", "1"])["written"] == []
 
 
+def test_job_reads_the_snapshot_its_lineage_names(spark, tmp_path, monkeypatch):
+    """Without --snapshot the scan is pinned to the head whose manifest
+    the lineage records: a commit landing in between changes neither."""
+    import argparse
+
+    from pulsarfeatureextractor_spark.sources.tokenized import synthetic_sequences
+
+    sys.path.insert(0, os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs"))
+    import extract_features
+
+    table = IcebergLikeTable(str(tmp_path / "table"))
+    df = synthetic_sequences(spark, 50, seed=3)
+    table.write(df)
+    seen = []
+    real = IcebergLikeTable.read
+
+    def read(self, spark, snapshot_id=None, *a, **kw):
+        table.write(df)  # the concurrent commit
+        seen.append(snapshot_id)
+        return real(self, spark, snapshot_id, *a, **kw)
+
+    monkeypatch.setattr(IcebergLikeTable, "read", read)
+    args = argparse.Namespace(input=table.path, snapshot=None, asof=None,
+                              scores=False, feature_set=None, gap_seconds=1800.0)
+    feats, lineage = extract_features.build_pipeline(spark, args)
+    assert seen == [lineage["snapshot_id"]] == [1]
+    assert feats.count() == 50
+
+
 @pytest.mark.slow
 def test_job_via_spark_submit(table_dir, tmp_path):
     """The literal deployment path: spark-submit --py-files."""

@@ -238,6 +238,10 @@ def test_escaped_partition_values_in_manifest_and_resume(spark, tmp_path):
     recorded = {f["partition"]["source"] for f in man["files"]}
     assert recorded == set(sources)
     assert recorded == {r["source"] for r in t.read(spark).collect()}
+    # a merge maps Spark's file URIs back to these escaped paths
+    t.merge_upsert(df.where(F.col("v") < 5), keys=["v"])
+    assert sorted(map(tuple, t.read(spark).collect()), key=str) == \
+        sorted(map(tuple, df.collect()), key=str)
 
     out = str(tmp_path / "out")
     lineage = {"snapshot_id": man["snapshot_id"]}

@@ -14,7 +14,9 @@ The manifest plans the scan: a read takes its file list and its schema
 from the manifest, so building the read DataFrame starts no Spark
 listing or schema-inference job whenever Spark's driver-side index of
 a snapshot's data directory holds exactly the manifest's files for it
-(see :meth:`IcebergLikeTable._scan_files`).
+(see :meth:`IcebergLikeTable._scan_files`).  The recorded schema
+covers every file a snapshot lists: an append records the head's
+schema merged with its own (see :meth:`IcebergLikeTable.commit`).
 
 The semantics mirror Iceberg's snapshot/manifest model; nothing here
 switches to a real Iceberg catalog, so moving to ``iceberg-spark-runtime``
@@ -138,6 +140,45 @@ def _list_parquet(root: str) -> list[str]:
     return sorted(found)
 
 
+_INTEGRAL = ["byte", "short", "integer", "long"]
+_FRACTIONAL = ["float", "double"]
+
+
+def _wider_type(name: str, a, b):
+    """The type column ``name`` takes over files written as ``a`` and
+    as ``b`` (schema JSON types): the wider of two integral or of two
+    fractional types, double for a byte/short/int and a fractional
+    type.  Spark's parquet reader widens exactly these (not long to
+    double); any other pair is refused."""
+    if a == b:
+        return a
+    for ladder in (_INTEGRAL, _FRACTIONAL):
+        if a in ladder and b in ladder:
+            return max(a, b, key=ladder.index)
+    to_double = _INTEGRAL[:3] + _FRACTIONAL
+    if a in to_double and b in to_double:
+        return "double"
+    raise ValueError(
+        f"column {name!r} is recorded as {a} but appended as {b}: "
+        "no reader type holds both")
+
+
+def _merge_schema(recorded: dict, appended: dict) -> dict:
+    """The schema an append records over the head's: the recorded
+    fields in order, each of them also appended at the wider type,
+    then the fields only the append has.  A field on one side only is
+    nullable (the other side's rows read it as NULL)."""
+    new = {f["name"]: f for f in appended["fields"]}
+    fields = []
+    for f in recorded["fields"]:
+        g = new.pop(f["name"], None)
+        fields.append({**f, "nullable": True} if g is None else {
+            **f, "type": _wider_type(f["name"], f["type"], g["type"]),
+            "nullable": f["nullable"] or g["nullable"]})
+    fields += [{**g, "nullable": True} for g in new.values()]
+    return {**recorded, "fields": fields}
+
+
 def _scan_base(reader, base: str, paths: "list[str]") -> DataFrame:
     """Read ``base`` as one root directory when Spark's index of it
     holds exactly ``paths``; otherwise read the explicit list."""
@@ -228,13 +269,18 @@ class IcebergLikeTable:
         ``added_paths`` (footer stats, hive partition values relative to
         ``base``); returns its manifest.  The only manifest writer.
         Zero-row added files (an empty task's output) are deleted, not
-        listed: no scan should open them.
+        listed: no scan should open them.  Each added file records
+        ``base_files``, the number of files committed under ``base``
+        so far, which tells a read whether the directory holds more.
 
-        An ``append`` carries the head's files as of publishing; any
-        other operation carries ``carried``, read from snapshot
-        ``parent``, and raises :class:`CommitConflictError` once the
-        head has moved.  Publishing hard-links an fsynced temp file
-        (kept out of ``snapshots/``, removed either way) to
+        An ``append`` carries the head's files as of publishing and
+        records the head's schema merged with ``schema``
+        (:func:`_merge_schema`: no column of older files is dropped; a
+        type they cannot be read as raises ``ValueError``); any other
+        operation carries ``carried``, read from snapshot ``parent``,
+        records ``schema``, and raises :class:`CommitConflictError`
+        once the head has moved.  Publishing hard-links an fsynced
+        temp file (kept out of ``snapshots/``, removed either way) to
         ``snap-<id>.json``; the link fails if the id exists, so a
         losing append re-reads the head and retries.
         """
@@ -253,12 +299,19 @@ class IcebergLikeTable:
             while True:
                 ids = self.snapshot_ids()
                 head = ids[-1] if ids else None
-                if operation == "append":
-                    carried = self.manifest(head)["files"] if ids else []
-                elif head != parent:
+                recorded = schema
+                if operation == "append" and ids:
+                    head_man = self.manifest(head)
+                    carried = head_man["files"]
+                    recorded = _merge_schema(head_man["schema"], schema)
+                elif operation != "append" and head != parent:
                     raise CommitConflictError(
                         f"{operation} of {self.path} was planned on snapshot "
                         f"{parent}, but snapshot {head} has been committed since")
+                n = len(added) + max((f.get("base_files", 0) for f in carried or []
+                                      if f.get("base") == base), default=0)
+                for f in added:
+                    f["base_files"] = n
                 files = (carried or []) + added
                 manifest = {
                     "snapshot_id": (head or 0) + 1,
@@ -266,7 +319,7 @@ class IcebergLikeTable:
                     "committed_at": time.time(),
                     "operation": operation,
                     "partition_spec": list(partition_spec),
-                    "schema": schema,
+                    "schema": recorded,
                     "files": files,
                     "total_rows": sum(f["rows"] for f in files),
                     "metrics": metrics or {},
@@ -303,10 +356,14 @@ class IcebergLikeTable:
           listed on the driver without a Spark job, when Spark's own
           index of it (same hidden-file and escaping rules as the scan)
           holds exactly the manifest's files for that base.  Otherwise
-          (a pruned or carried subset; an orphan, an uncommitted file
-          or a foreign layout beside them) it is read as the explicit
-          path list, which Spark lists with a job once it passes its
-          parallel-discovery threshold.
+          it is read as the explicit path list, which Spark lists with
+          a job once it passes its parallel-discovery threshold.  A
+          base listing fewer files than were committed under it (a
+          merge's carried subset, a ``prune=`` read) goes to the list
+          at once; the directory is listed first, then thrown away,
+          only when it holds a file no commit so far named (an orphan,
+          an uncommitted file, a foreign layout, time travel into the
+          sink's output before later appends).
 
         Optionally attach the ``_metadata.file_path`` hidden column
         (which must be selected directly on each scan — it does not
@@ -321,13 +378,18 @@ class IcebergLikeTable:
                 )
             return spark.createDataFrame([], schema)
         by_base: dict[str, list[str]] = {}
+        committed: dict[str, int] = {}
         for f in files:
-            by_base.setdefault(f.get("base", ""), []).append(f["path"])
+            base = f.get("base", "")
+            by_base.setdefault(base, []).append(f["path"])
+            committed[base] = max(committed.get(base, 0), f.get("base_files", 0))
         df = None
         for base, paths in sorted(by_base.items()):
             reader = spark.read.schema(schema)
             if base:
-                part = _scan_base(reader.option("basePath", base), base, paths)
+                reader = reader.option("basePath", base)
+            if base and len(paths) >= committed[base]:
+                part = _scan_base(reader, base, paths)
             else:
                 part = reader.parquet(*paths)
             if with_file_col:

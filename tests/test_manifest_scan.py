@@ -6,6 +6,7 @@ import glob
 import os
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from pulsarfeatureextractor_spark.sinks.manifest import IcebergLikeTable
@@ -145,3 +146,51 @@ def test_commit_lists_and_keeps_no_zero_row_file(spark, tmp_path):
         assert glob.glob(os.path.join(f["base"], "**", "*.parquet"),
                          recursive=True) == [f["path"]]
         assert t.read(spark).collect() == [(1, "a")]
+
+
+def test_append_keeps_older_columns_and_widens_types(spark, tmp_path):
+    """An append records the head's schema merged with its own: a column
+    only older files hold still reads through ``read``, ``merge_upsert``
+    and ``compact``; int files appended over long ones read as long; a
+    type no reader holds both ways is refused."""
+    t = IcebergLikeTable(str(tmp_path / "tbl"))
+    t.write(spark.createDataFrame(
+        [(1, "a", 10), (2, "b", 20)], "k long, v string, extra long"))
+    t.write(spark.createDataFrame([(3, "c")], "k int, v string"), mode="append")
+    want = {1: ("a", 10), 2: ("b", 20), 3: ("c", None)}
+
+    def rows():
+        d = t.read(spark)
+        assert dict(d.dtypes)["k"] == "bigint"
+        return {r["k"]: (r["v"], r["extra"]) for r in d.collect()}
+
+    assert rows() == want
+    t.merge_upsert(spark.createDataFrame([(2, "B")], "k long, v string"), keys=["k"])
+    want[2] = ("B", None)
+    assert rows() == want
+    t.compact()
+    assert rows() == want
+    with pytest.raises(ValueError, match="extra"):
+        t.write(spark.createDataFrame(
+            [(4, "d", "x")], "k long, v string, extra string"), mode="append")
+    assert rows() == want
+
+
+def test_a_base_read_in_part_is_not_listed_whole_first(spark, tmp_path):
+    """A merge's carried subset and a ``prune=`` read list fewer files
+    than were committed under their base, so they go straight to the
+    path list: listing the 40-partition directory first would start a
+    Spark job of its own."""
+    t = IcebergLikeTable(str(tmp_path / "tbl"))
+    t.write(spark.range(40).select(
+        F.col("id").alias("k"), F.col("id").cast("string").alias("p"))
+        .repartition(1), partition_by=["p"])
+    t.merge_upsert(spark.createDataFrame([(0, "0")], "k long, p string"), keys=["k"])
+    mark = _last_job(spark)
+    head = t.read(spark)
+    assert _last_job(spark) - mark == 1  # the 39 carried paths, listed once
+    assert _keys(head) == list(range(40))
+    mark = _last_job(spark)
+    pruned = t.read(spark, prune=("k", 1, 35))
+    assert _last_job(spark) - mark == 1
+    assert _keys(pruned) == list(range(1, 36))

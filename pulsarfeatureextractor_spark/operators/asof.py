@@ -68,9 +68,10 @@ _ORDERING_CONF = "spark.sql.legacy.bucketedTableScan.outputOrdering"
 @contextmanager
 def bucketed_scan_ordering(spark):
     """Enable ``spark.sql.legacy.bucketedTableScan.outputOrdering`` for
-    the duration of the block and RESTORE the prior value on exit —
-    the save/restore discipline sinks/partitioned.py uses for
-    partitionOverwriteMode.  Use this around code that derives further
+    the duration of the block and RESTORE the prior value on exit: the
+    conf has no per-query form (unlike partitionOverwriteMode, which
+    the partitioned sink passes as a write option), and shared sessions
+    must not inherit it.  Use this around code that derives further
     plans from ``asof_bucketed_storage(elide_sort=True)`` output (the
     conf is read at planning time, so every plan built inside the block
     sees it; plans built after exit do not)."""

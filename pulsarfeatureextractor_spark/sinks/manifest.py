@@ -23,14 +23,15 @@ switches to a real Iceberg catalog, so moving to ``iceberg-spark-runtime``
 means changing the call sites to ``spark.read.format("iceberg")``.
 
 Commit protocol (crash safety without table-format transactions):
-data files are written FIRST (``write``/``merge_upsert`` into an
-immutable ``data/snap-<uuid>/`` directory; the partitioned sink into
-its output's hive layout); :meth:`IcebergLikeTable.commit` then
-publishes the manifest naming them LAST, create-if-absent.  A crash
-between the two leaves orphan files that no manifest references —
-invisible to every reader, exactly Iceberg's orphan-file semantics.
-Two writers racing for one snapshot id cannot both win it: an append
-re-bases on the new head, any other operation raises.
+data files are written FIRST — ``write``, ``merge_upsert`` and
+``compact`` through ONE writer, ``partitionBy(spec)`` into an immutable
+``data/snap-<uuid>/``; the partitioned sink into its output's hive
+layout, committed to ``<out>/_table``, which takes only the sink's
+appends — and :meth:`IcebergLikeTable.commit` publishes the manifest
+naming them LAST, create-if-absent.  A crash between the two leaves
+orphan files no manifest references: invisible to every reader, as in
+Iceberg.  Two writers racing for one snapshot id cannot both win it:
+an append re-bases on the new head, any other operation raises.
 """
 
 from __future__ import annotations
@@ -233,25 +234,40 @@ class IcebergLikeTable:
         partition_by: "list[str] | None" = None,
         mode: str = "append",
         metrics: "dict | None" = None,
-        operation: "str | None" = None,
     ) -> dict:
         """Commit ``df`` as a new snapshot; returns the manifest dict.
 
         ``mode="append"`` layers a new snapshot whose manifest = previous
         files + new files (Iceberg append); ``mode="overwrite"`` starts a
         manifest from only the new files (Iceberg overwrite — old data
-        files stay on disk for time travel of old snapshot ids).
+        files stay on disk for time travel of old snapshot ids); any
+        other mode raises ``ValueError``.  ``df`` is written as it is
+        partitioned: its partitioning sets the file layout.
         """
-        ids = self.snapshot_ids()
+        if mode not in ("append", "overwrite"):
+            raise ValueError(f"write mode {mode!r}: use 'append' or 'overwrite'")
+        head = self.manifest() if self.snapshot_ids() else None
+        return self._write_snapshot(df, partition_by or [], mode, metrics, head)
+
+    def _write_snapshot(self, df: DataFrame, spec: "list[str]", operation: str,
+                        metrics: "dict | None", head: "dict | None",
+                        carried: "list[dict] | None" = None) -> dict:
+        """The one write path of ``write``, ``merge_upsert`` and
+        ``compact``: ``df`` with ``partitionBy(spec)`` into a fresh
+        ``data/snap-<uuid>/``, committed on ``head`` (None: empty table).
+        Refused before writing if ``head`` lists files outside ``data/``,
+        as a sink's ``<out>/_table`` does: its output would miss them."""
+        own = os.path.join(self.path, DATA_DIR, "")
+        if head and any(not _uri_local_path(f["path"]).startswith(own)
+                        for f in head["files"]):
+            raise ValueError(f"{self.path} is a partitioned sink's table: it "
+                             f"takes only the sink's appends, not this {operation}")
         data_dir = os.path.join(self.path, DATA_DIR, f"snap-{uuid.uuid4().hex}")
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(data_dir)
+        df.write.mode("overwrite").partitionBy(*spec).parquet(data_dir)
         return self.commit(
-            _list_parquet(data_dir), data_dir, operation or mode,
-            partition_by or [], df.schema.jsonValue(), metrics,
-            parent=ids[-1] if ids else None,
+            _list_parquet(data_dir), data_dir, operation, spec,
+            df.schema.jsonValue(), metrics, carried=carried,
+            parent=head["snapshot_id"] if head else None,
         )
 
     def commit(
@@ -406,7 +422,6 @@ class IcebergLikeTable:
         updates: DataFrame,
         keys: "list[str]",
         metrics: "dict | None" = None,
-        broadcast_keys: bool = True,
     ) -> dict:
         """Copy-on-write MERGE by key (Iceberg ``MERGE INTO`` with
         copy-on-write row-level ops): rows whose key matches an
@@ -418,50 +433,37 @@ class IcebergLikeTable:
 
         Mechanics: the current snapshot is scanned with the
         ``_metadata.file_path`` hidden column; a semi join against the
-        distinct incoming keys yields the touched-file list (driver
-        sees file PATHS only — O(#files) metadata).  Survivor rows
-        (touched files ∖ matched keys) union the updates into a new
-        data directory; the manifest lists untouched-prev + new files.
-        Time travel to pre-merge snapshots is unaffected.  Schema
-        evolution is tolerated on both sides (unionByName with missing
-        columns null-filled); the new manifest records the merged
-        schema.  ``broadcast_keys=False`` drops the broadcast hints on
-        the key joins (use for update batches too large to broadcast —
-        AQE then picks the join strategy).
+        distinct incoming keys (broadcast) yields the touched-file list
+        (driver sees file PATHS only — O(#files) metadata).  Survivor
+        rows (touched files ∖ matched keys) union the updates, are
+        rebalanced by the partition spec (AQE may still split a hot
+        value) and written under it, each file with its partition
+        values; the manifest lists untouched-prev + new files.  Time
+        travel to pre-merge snapshots is unaffected.  Schema evolution
+        is tolerated on both sides (unionByName with missing columns
+        null-filled); the new manifest records the merged schema.  A
+        partitioned sink's ``<out>/_table`` raises ValueError.
         """
         spark = updates.sparkSession
-        ids = self.snapshot_ids()
-        if not ids:
+        if not self.snapshot_ids():
             return self.write(updates, mode="overwrite", metrics=metrics)
-        man = self.manifest(ids[-1])
+        man = self.manifest()
         cur = self._scan_files(spark, man["files"], man["schema"], with_file_col=True)
-        key_df = updates.select(*keys).dropDuplicates(keys)
-        maybe_b = F.broadcast if broadcast_keys else (lambda d: d)
-        # Keep the RAW ``_metadata.file_path`` strings for the survivor
-        # filter (exact match against the same column is render-proof),
-        # and compare against manifest paths through ONE URI parser
-        # instead of hand-stripped 'file:' prefixes — if Spark renders
-        # the scheme differently the old isin silently matched nothing,
-        # carrying stale rows alongside the updates (ADVICE r2).
-        touched_raw = [
-            r["__file"]
-            for r in cur.join(maybe_b(key_df), keys, "left_semi")
-            .select("__file")
-            .distinct()
-            .collect()
-        ]
+        key_df = F.broadcast(updates.select(*keys).dropDuplicates(keys))
+        # the RAW ``_metadata.file_path`` strings filter the survivors
+        # (an exact match on the same column is render-proof); they meet
+        # the manifest's paths only through ONE URI parser
+        touched_raw = [r["__file"] for r in cur.join(key_df, keys, "left_semi")
+                       .select("__file").distinct().collect()]
         touched = {_uri_local_path(p) for p in touched_raw}
         untouched_prev = [
             f for f in man["files"] if _uri_local_path(f["path"]) not in touched
         ]
-        manifest_norm = {_uri_local_path(f["path"]) for f in man["files"]}
-        unmapped = sorted(touched - manifest_norm)
+        unmapped = sorted(
+            touched - {_uri_local_path(f["path"]) for f in man["files"]})
         if unmapped:
-            # Must fire on ANY unmapped touched file, not only when ALL
-            # fail to map: under mixed rendering the unmapped file would
-            # stay in untouched_prev while its surviving rows are also
-            # rewritten into the new data file — silent row duplication
-            # (ADVICE r3 #1).
+            # ANY unmapped file would be carried AND have its survivors
+            # rewritten: its rows would be duplicated
             raise RuntimeError(
                 "merge_upsert: "
                 f"{len(unmapped)} of {len(touched)} touched file(s) "
@@ -471,19 +473,18 @@ class IcebergLikeTable:
             )
         survivors = (
             cur.where(F.col("__file").isin(touched_raw))
-            .join(maybe_b(key_df), keys, "left_anti")
+            .join(key_df, keys, "left_anti")
             .drop("__file")
         )
         new_data = survivors.unionByName(updates, allowMissingColumns=True)
-
-        data_dir = os.path.join(self.path, DATA_DIR, f"snap-{uuid.uuid4().hex}")
-        new_data.write.mode("overwrite").parquet(data_dir)
-        return self.commit(
-            _list_parquet(data_dir), data_dir, "merge",
-            man.get("partition_spec", []), new_data.schema.jsonValue(),
+        spec = man["partition_spec"]
+        if spec:
+            new_data = new_data.hint("rebalance", *spec)
+        return self._write_snapshot(
+            new_data, spec, "merge",
             {**(metrics or {}), "files_rewritten": len(touched),
              "files_carried": len(untouched_prev)},
-            carried=untouched_prev, parent=man["snapshot_id"],
+            man, carried=untouched_prev,
         )
 
     def read(
@@ -559,21 +560,23 @@ class IcebergLikeTable:
         return self._scan_files(spark, new_files, self.manifest(to)["schema"])
 
     def compact(self, target_file_mb: int = 128) -> dict:
-        """Bin-pack small files into ~target-sized ones as a NEW
-        overwrite snapshot (Iceberg rewrite_data_files surface).  Old
-        snapshots stay readable until expired; readers never see a
-        half-compacted state (manifest commit is atomic)."""
+        """Rewrite the head's files as a NEW ``compact`` snapshot
+        (Iceberg rewrite_data_files surface): a partitioned table's rows
+        rebalanced by its spec (AQE sizes the files), an unpartitioned
+        one's coalesced to ~``target_file_mb`` files.  Old snapshots stay
+        readable until expired; the atomic commit hides a half-compacted
+        state.  A partitioned sink's ``<out>/_table`` raises ValueError."""
         man = self.manifest()
         spark = SparkSession.getActiveSession()
-        df = self.read(spark)
-        total_bytes = sum(f["bytes"] for f in man["files"])
-        n_files = max(1, int(total_bytes / (target_file_mb * 1024 * 1024)) + 1)
-        part_cols = man.get("partition_spec") or []
-        compacted = df.repartition(n_files, *part_cols) if part_cols else \
-            df.coalesce(n_files)
-        new_man = self.write(compacted, partition_by=part_cols or None,
-                             mode="overwrite", operation="compact",
-                             metrics={"compacted_from": len(man["files"])})
+        df = self._scan_files(spark, man["files"], man["schema"])
+        spec = man["partition_spec"]
+        if spec:
+            df = df.hint("rebalance", *spec)
+        else:
+            total_bytes = sum(f["bytes"] for f in man["files"])
+            df = df.coalesce(int(total_bytes / (target_file_mb * 1024 * 1024)) + 1)
+        new_man = self._write_snapshot(
+            df, spec, "compact", {"compacted_from": len(man["files"])}, man)
         return {"before_files": len(man["files"]),
                 "after_files": len(new_man["files"]),
                 "snapshot_id": new_man["snapshot_id"]}

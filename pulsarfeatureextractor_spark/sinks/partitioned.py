@@ -8,8 +8,8 @@ Design:
 
 - the data lands in Spark's hive layout under ``out_dir``, one atomic
   parquet job per batch of partitions with dynamic partition
-  overwrite: a partition dir is fully committed or invisible, and
-  rewriting it is idempotent;
+  overwrite (a write option): a partition dir is fully committed or
+  invisible, and rewriting it is idempotent;
 - each batch then commits one ``append`` snapshot of
   ``IcebergLikeTable(<out_dir>/_table)`` listing its files, with their
   partition values and footer row counts.  The snapshot's ``metrics``
@@ -111,7 +111,8 @@ def run_partitioned_job(
 
     Partitions in the output table are only skipped when the head
     snapshot's lineage equals ``lineage``; any difference raises
-    ``ValueError`` naming the field.
+    ``ValueError`` naming the field, as do no or a blank partition
+    column.
 
     Scale note: ``batch_size=0`` evaluates ``df`` once — one SQL
     execution, no planning job: the done keys are filtered out with
@@ -122,6 +123,10 @@ def run_partitioned_job(
     ``out_dir`` and read footers on the driver: no Spark action.
     """
     part_cols = list(partition_cols)
+    if not part_cols or not all(c.strip() for c in part_cols):
+        # an unpartitioned overwrite would replace out_dir, _table included
+        raise ValueError(f"partition_cols {part_cols!r}: name at least one "
+                         "column, and no blank one")
     lineage = lineage or {}
     # absolute and '..'-free like the table path: the committed file
     # paths must be the ones Spark's writer and file index use
@@ -147,48 +152,36 @@ def run_partitioned_job(
         todo = sorted(r["__key"] for r in todo_df.select("__key").distinct().collect())
         batches = [todo[i:i + batch_size] for i in range(0, len(todo), batch_size)]
 
-    spark = df.sparkSession
-    # dynamic overwrite: only the partitions present in the batch are
-    # replaced — an interrupted batch's rerun is idempotent, and the
-    # output table under ``_table`` is never touched.  The conf is
-    # restored on exit (this runs inside shared sessions — e.g. the
-    # driver verify session — which must not inherit the mode).
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
     written: list[str] = []
-    try:
-        for bi, batch in enumerate(batches):
-            if fail_after_batches and bi >= fail_after_batches:
-                raise RuntimeError(f"simulated kill before batch {bi}")
-            obs = Observation(f"batch-{bi}")
-            batch_df = todo_df
-            if batch is not None:
-                batch_df = batch_df.where(F.col("__key").isin(batch))
-            # the written keys come from the write itself, not the plan
-            observed = batch_df.observe(
-                obs, F.count(F.lit(1)).alias("rows"),
-                F.collect_set("__key").alias("__keys"),
-            ).drop("__key")
-            (observed.write.mode("overwrite")
-             .partitionBy(*part_cols).parquet(out_dir))
-            metrics = dict(obs.get)
-            keys = sorted(metrics.pop("__keys"))
-            if not keys:  # every partition was already done
-                continue
-            metrics["partitions"] = len(keys)
-            # the batch's partition dirs hold exactly its files now
-            keyset = set(keys)
-            files = [p for p in _list_parquet(out_dir) if _manifest_key(
-                _partition_values(out_dir, p), part_cols) in keyset]
-            table.commit(files, out_dir, "append", part_cols,
-                         df.schema.jsonValue(),
-                         {**lineage, "batch_metrics": metrics})
-            written.extend(keys)
-    finally:
-        if prev_mode is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+    for bi, batch in enumerate(batches):
+        if fail_after_batches and bi >= fail_after_batches:
+            raise RuntimeError(f"simulated kill before batch {bi}")
+        obs = Observation(f"batch-{bi}")
+        batch_df = todo_df
+        if batch is not None:
+            batch_df = batch_df.where(F.col("__key").isin(batch))
+        # the written keys come from the write itself, not the plan
+        observed = batch_df.observe(
+            obs, F.count(F.lit(1)).alias("rows"),
+            F.collect_set("__key").alias("__keys"),
+        ).drop("__key")
+        # dynamic overwrite replaces only the batch's partitions: a
+        # batch's rerun is idempotent and ``_table`` is never touched
+        (observed.write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy(*part_cols).parquet(out_dir))
+        metrics = dict(obs.get)
+        keys = sorted(metrics.pop("__keys"))
+        if not keys:  # every partition was already done
+            continue
+        metrics["partitions"] = len(keys)
+        # the batch's partition dirs hold exactly its files now
+        keyset = set(keys)
+        files = [p for p in _list_parquet(out_dir) if _manifest_key(
+            _partition_values(out_dir, p), part_cols) in keyset]
+        table.commit(files, out_dir, "append", part_cols,
+                     df.schema.jsonValue(),
+                     {**lineage, "batch_metrics": metrics})
+        written.extend(keys)
 
     return {"written": written, "skipped": done}

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pulsarfeatureextractor_spark.sinks.manifest import (
     CommitConflictError,
     IcebergLikeTable,
+    _partition_values,
 )
 from pulsarfeatureextractor_spark.sinks.partitioned import (
     _manifest_key,
@@ -238,8 +239,13 @@ def test_escaped_partition_values_in_manifest_and_resume(spark, tmp_path):
     recorded = {f["partition"]["source"] for f in man["files"]}
     assert recorded == set(sources)
     assert recorded == {r["source"] for r in t.read(spark).collect()}
-    # a merge maps Spark's file URIs back to these escaped paths
-    t.merge_upsert(df.where(F.col("v") < 5), keys=["v"])
+    # a merge maps Spark's file URIs back to these escaped paths, and
+    # writes its rows back under them
+    merged = t.merge_upsert(df.where(F.col("v") < 5), keys=["v"])
+    new = [f for f in merged["files"] if f not in man["files"]]
+    assert {f["partition"]["source"] for f in new} == set(sources)
+    for f in new:
+        assert f["partition"] == _partition_values(f["base"], f["path"])
     assert sorted(map(tuple, t.read(spark).collect()), key=str) == \
         sorted(map(tuple, df.collect()), key=str)
 
@@ -356,3 +362,31 @@ def test_resume_refuses_other_partition_spec(spark, seq_df, tmp_path):
     run_partitioned_job(seq_df, out, ["source"])
     with pytest.raises(ValueError, match="partition_spec.*new --output"):
         run_partitioned_job(seq_df, out, ["n_tok"])
+
+
+@pytest.mark.parametrize("cols", [[], [""], ["source", " "]])
+def test_sink_refuses_no_or_blank_partition_columns(spark, seq_df, tmp_path, cols):
+    """Without a partition column the sink's overwrite would replace
+    the whole output directory, its ``_table`` manifests included."""
+    out = str(tmp_path / "out")
+    with pytest.raises(ValueError, match="partition_cols"):
+        run_partitioned_job(seq_df, out, cols)
+    assert not os.path.exists(out)
+
+
+def test_resume_under_a_static_overwrite_session(spark, seq_df, tmp_path):
+    """Dynamic overwrite is the sink's write option: under a session
+    whose overwrite mode is static, a resumed batch replaces only its
+    own partitions, and the session's mode is left as it was."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "static")
+    try:
+        out = str(tmp_path / "out")
+        with pytest.raises(RuntimeError, match="simulated kill"):
+            run_partitioned_job(seq_df, out, ["source"], batch_size=1,
+                                fail_after_batches=1)
+        run_partitioned_job(seq_df, out, ["source"], batch_size=1)
+        assert spark.conf.get(key) == "static"
+        assert _rows(spark.read.parquet(out)) == _rows(seq_df)
+    finally:
+        spark.conf.unset(key)

@@ -9,7 +9,10 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from pulsarfeatureextractor_spark.sinks.manifest import IcebergLikeTable
+from pulsarfeatureextractor_spark.sinks.manifest import (
+    IcebergLikeTable,
+    _partition_values,
+)
 from pulsarfeatureextractor_spark.sinks.partitioned import run_partitioned_job
 
 
@@ -33,6 +36,17 @@ def _forty_files(spark, n=400):
 
 def _keys(df):
     return sorted(r["k"] for r in df.select("k").collect())
+
+
+def _assert_written_under_partitions(before, after):
+    """Every file ``after`` added over ``before`` records the partition
+    values its directory holds, and none records ``{}``."""
+    old = {f["path"] for f in before["files"]}
+    new = [f for f in after["files"] if f["path"] not in old]
+    assert new
+    for f in new:
+        assert f["partition"] and f["partition"] == _partition_values(
+            f["base"], f["path"])
 
 
 def test_fresh_snapshot_read_starts_no_spark_job(spark, tmp_path):
@@ -105,12 +119,13 @@ def test_partition_values_keep_their_type(spark, tmp_path):
         return sorted((r["p"], r["x"]) for r in d.collect())
 
     t = IcebergLikeTable(str(tmp_path / "tbl"))
-    t.write(df, partition_by=["p"])
+    before = t.write(df, partition_by=["p"])
     assert rows(t.read(spark)) == want
     # the merge rewrites '2' and carries the '001' and '010' files
     man = t.merge_upsert(
         spark.createDataFrame([("2", 3)], "p string, x long"), keys=["x"])
     assert man["metrics"]["files_carried"] == 2
+    _assert_written_under_partitions(before, man)
     assert rows(t.read(spark)) == want
 
     out = str(tmp_path / "out")
@@ -194,3 +209,49 @@ def test_a_base_read_in_part_is_not_listed_whole_first(spark, tmp_path):
     pruned = t.read(spark, prune=("k", 1, 35))
     assert _last_job(spark) - mark == 1
     assert _keys(pruned) == list(range(1, 36))
+
+
+def test_compact_keeps_partition_values(spark, tmp_path):
+    t = IcebergLikeTable(str(tmp_path / "tbl"))
+    before = t.write(_forty_files(spark), partition_by=["source"])
+    t.compact()
+    after = t.manifest()
+    _assert_written_under_partitions(before, after)
+    assert len(after["files"]) == 20
+    assert _keys(t.read(spark)) == list(range(400))
+
+
+def test_write_refuses_an_unknown_mode(spark, tmp_path):
+    """A misspelt mode is neither an append nor an overwrite: it would
+    commit a snapshot listing only the new files."""
+    t = IcebergLikeTable(str(tmp_path / "tbl"))
+    t.write(spark.range(10).select(F.col("id").alias("k")))
+    with pytest.raises(ValueError, match="apend"):
+        t.write(spark.range(10, 12).select(F.col("id").alias("k")), mode="apend")
+    assert t.snapshot_ids() == [1]
+    assert _keys(t.read(spark)) == list(range(10))
+
+
+def test_sink_table_takes_only_the_sinks_appends(spark, tmp_path):
+    """A sink's ``<out>/_table`` lists the files of the output directory
+    itself: a merge, write or compaction of the table would land only in
+    the table view.  Each is refused, the two views stay equal and a
+    rerun of the sink still skips every partition."""
+    df = _forty_files(spark, n=100)
+    out = str(tmp_path / "out")
+    run_partitioned_job(df, out, ["source"])
+    table = IcebergLikeTable(os.path.join(out, "_table"))
+    one = spark.createDataFrame([(1, "1", "new")], "k long, source string, v string")
+    for op in (lambda: table.merge_upsert(one, keys=["k"]),
+               lambda: table.write(one, partition_by=["source"]),
+               lambda: table.compact()):
+        with pytest.raises(ValueError, match="sink's table"):
+            op()
+    assert table.snapshot_ids() == [1]
+    assert not os.path.exists(os.path.join(table.path, "data"))
+    hive = spark.read.parquet(out)
+    view = table.read(spark)
+    assert hive.where(F.col("v") == "new").count() == 0
+    assert hive.exceptAll(view).count() == 0 and view.exceptAll(hive).count() == 0
+    res = run_partitioned_job(df, out, ["source"])
+    assert res["written"] == [] and len(res["skipped"]) == 20
